@@ -181,22 +181,10 @@ def main() -> int:
     # queries pile up in the block manager and local dirs, and
     # late-suite queries pay the accumulated GC/IO pressure (the
     # 2-3× in-suite-vs-solo medians of r10/r11). The _settle() sweeps
-    # below drive the cleaner BETWEEN timed regions. A timer-driven
-    # periodic GC (spark.cleaner.periodicGC.interval) was tried first
-    # and REVERTED: its full GCs land inside whatever query happens to
-    # be on the clock — the 90 s cadence measured a 465 s suite with
-    # scattered 3-8x inflations (dedup_cluster_sizes 2.8->23.7,
-    # corpus_clean 4.3->23.7) vs 368 s without it. Env-gated for
-    # diagnostics only.
-    gc_interval = os.environ.get("SPARK_GRAFT_BENCH_GC_INTERVAL", "").strip()
-    spark = get_spark(
-        "overpaint-bench",
-        extra_conf=(
-            {"spark.cleaner.periodicGC.interval": gc_interval}
-            if gc_interval
-            else None
-        ),
-    )
+    # below drive the cleaner BETWEEN timed regions. No timer-driven
+    # periodic GC: its full GCs land inside whichever query is on the
+    # clock (a 90 s cadence measured 465 s for the suite vs 368 s).
+    spark = get_spark("overpaint-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up: JVM + codegen, the noop sink's one-time init, and the

@@ -44,8 +44,8 @@ def cosine(a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | 
     NaN similarity would make the zero vector the rank-1 neighbor of
     every query and pass every ``>= threshold`` filter; -1.0 fails every
     real threshold and sorts last under the desc orderings here. -1.0
-    (not NULL) because the vectorized numpy twins
-    (``brute_force_topk_numpy``, ``embedding_near_dup_pairs_numpy``)
+    (not NULL) because the vectorized numpy paths
+    (``brute_force_topk_numpy``, ``embedding_near_dup_pairs_blocked``)
     pin the same case via ``nan_to_num(nan=-1.0)`` — both declared
     paths must emit identical rows for identical input (pinned in
     tests/test_similarity.py)."""

@@ -37,6 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+from pyspark.util import inheritable_thread_target
 
 from overpaint_spark.localrel import local_df
 
@@ -216,9 +217,11 @@ def persist_ann_index(index: AnnIndex, path: str) -> None:
             spark, cb_rows, "subspace int, code int, center array<double>"
         ).write.mode("overwrite").parquet(f"{path}/codebook")
 
+    # the pool threads inherit this thread's job group and tags
+    tagged = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=3) as pool:
         futs = [
-            pool.submit(fn)
+            pool.submit(tagged(fn))
             for fn in (_write_codes, _write_centroids, _write_codebook)
         ]
         for fut in futs:
@@ -235,12 +238,13 @@ def load_ann_index(
 
     import numpy as np
 
+    tagged = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
         cent_fut = pool.submit(
-            lambda: spark.read.parquet(f"{path}/centroids").collect()
+            tagged(lambda: spark.read.parquet(f"{path}/centroids").collect())
         )
         cb_fut = pool.submit(
-            lambda: spark.read.parquet(f"{path}/codebook").collect()
+            tagged(lambda: spark.read.parquet(f"{path}/codebook").collect())
         )
         cent = sorted((r.cluster_id, r.centroid) for r in cent_fut.result())
         cbr = cb_fut.result()

@@ -535,53 +535,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_near_dup_pairs_numpy(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact near-dup pairs via Arrow-batched BLAS (``mapInPandas``).
-
-    The full (id, vector) matrix is collected to the driver and shipped
-    once to every partition (N×dim doubles — fine only while the WHOLE
-    table fits in driver memory); each Arrow batch of rows then scores
-    against it with one GEMM and emits only the ``a_id < b_id`` pairs
-    above threshold. Compared to a per-pair cosine fold over a
-    nested-loop join this is ~20× faster at 5k vectors, but the
-    driver-side ``collect()`` makes it a small-table utility ONLY: the
-    exact distributed path is :func:`embedding_near_dup_pairs_blocked`
-    (no collect, same output), and the approximate scale path is
-    :func:`embedding_near_dup_pairs_bucketed`.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = emb.select(id_col, vec_col).collect()
-    all_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    all_mat = np.array([r[1] for r in rows], dtype=np.float64)
-    all_norm = np.linalg.norm(all_mat, axis=1)
-
-    out_schema = "a_id long, b_id long, cosine_sim double"
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            if len(ids) == 0:
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sims = (mat @ all_mat.T) / (np.linalg.norm(mat, axis=1)[:, None] * all_norm[None, :])
-            np.nan_to_num(sims, nan=-1.0, copy=False)  # zero-norm vectors
-            li, ri = np.nonzero((sims >= threshold) & (ids[:, None] < all_ids[None, :]))
-            if len(li):
-                yield pd.DataFrame(
-                    {"a_id": ids[li], "b_id": all_ids[ri], "cosine_sim": sims[li, ri]}
-                )
-
-    return emb.select(id_col, vec_col).mapInPandas(score, out_schema)
-
-
 def embedding_near_dup_pairs_blocked(
     emb: DataFrame,
     threshold: float = 0.4,

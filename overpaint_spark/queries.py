@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.util import inheritable_thread_target
 
 from overpaint_spark.functions import text as TX
 from overpaint_spark.functions import typeclass
@@ -7667,29 +7668,91 @@ def _oracle_split_dedup_leakage() -> str:
     )
 
 
-def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed training-corpus pipeline — what the LLM-dedup operators
-    exist FOR, end to end: quality gate (text_quality composite ≥ 0.5)
-    ∧ exact-dedup keeper (min-id per identical text) ∧ near-dup cluster
-    representative (components over verified LSH pairs). All three
-    predicates are semi/anti joins on doc_id against small derived sets,
-    so the document payload is scanned once and never shuffled."""
+# band tuned to the fixtures' score spread (≈4.7k–6.6k ppm — the tiny
+# synthetic vocabulary makes trigrams common): cuts both tails at every
+# SF (13+8 docs at sf0.001, 49+77 at sf0.1). The score is an INTEGER, so
+# the boundary comparison is exact in any engine.
+_LM_BAND_LO, _LM_BAND_HI = 5400, 6300
+_SPAN_DUP_MAX_PPM = 300_000
+
+
+def _flag(cond: F.Column) -> F.Column:
+    return F.coalesce(cond, F.lit(False)).cast("int")
+
+
+def _clean_flags(docs: DataFrame, *, lm: bool, spans: bool) -> DataFrame:
+    """The corpus-cleaning stages as ONE per-document relation: doc_id,
+    lang, quality_score and the 0/1 stage flags
+
+      k  exact-dedup keeper (min doc_id per identical text)
+      s  near-dup cluster survivor (union-find over verified LSH pairs)
+      q  heuristic quality ≥ 0.5
+      m  LM score inside the band (``lm``; adds lm_score_ppm) — docs
+         whose average trigram probability is implausibly LOW are
+         gibberish, implausibly HIGH are boilerplate/templates
+      p  ≤ 30% of the doc's 10-token windows duplicated in other docs
+         (``spans``; adds dup_frac_ppm) — the boilerplate carriers the
+         whole-doc dedups cannot see (Lee et al. 2021). A doc too short
+         for any span carries no duplication evidence: 0 ppm, kept.
+
+    Every stage is a doc_id-keyed LEFT join onto one documents scan and
+    every cut is an exact comparison (integer ppm for m and p), so no
+    float boundary can flip between engines. A cleaner filters
+    ``flag = 1`` per stage, which turns that stage's join inner and
+    pushes the quality cut into the scan; the funnel sums the flags.
+
+    The union-find pair collect and the LM-model materialization are
+    the two build-time driver actions and independent jobs: the model
+    builds on a pool thread (inheriting this thread's job group) while
+    the pairs collect here, so the wall is the slower of the two."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from overpaint_spark.operators.components import dedup_survivors
 
-    docs = _t(spark, sf_dir, "documents")
-    quality_ok = docs.select(
-        "doc_id", TX.quality_score(F.col("text")).alias("quality_score")
-    ).filter(F.col("quality_score") >= 0.5)
-    keepers = DD.exact_dedup_groups(docs).select(
-        F.col("keeper_id").alias("doc_id")
-    )
     pairs = DD.lsh_near_dup_pairs(
         docs, k=3, num_hashes=_MINHASH_K, bands=_MINHASH_BANDS, threshold=0.5,
     )
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        if lm:
+            tagged = inheritable_thread_target(docs.sparkSession)
+            scored = pool.submit(tagged(_lm_scored), docs)
+        surv = dedup_survivors(docs, pairs).select("doc_id", F.lit(True).alias("s"))
+    keepers = DD.exact_dedup_groups(docs).select(
+        F.col("keeper_id").alias("doc_id"), F.lit(True).alias("k")
+    )
+    quality = TX.quality_score(F.col("text")).alias("quality_score")
+    flags = (
+        docs.select("doc_id", "lang", quality)
+        .join(keepers, "doc_id", "left")
+        .join(surv, "doc_id", "left")
+    )
+    cols = [
+        "doc_id", "lang", "quality_score",
+        _flag(F.col("k")).alias("k"),
+        _flag(F.col("s")).alias("s"),
+        _flag(F.col("quality_score") >= 0.5).alias("q"),
+    ]
+    if lm:
+        lm_ppm = scored.result().select("doc_id", "lm_score_ppm")
+        flags = flags.join(lm_ppm, "doc_id", "left")
+        band = F.col("lm_score_ppm").between(_LM_BAND_LO, _LM_BAND_HI)
+        cols += ["lm_score_ppm", _flag(band).alias("m")]
+    if spans:
+        dup_frac = substring_span_stats(docs).select("doc_id", "dup_frac_ppm")
+        flags = flags.join(dup_frac, "doc_id", "left")
+        dup = F.coalesce(F.col("dup_frac_ppm"), F.lit(0)).cast("bigint")
+        cols += [dup.alias("dup_frac_ppm"), _flag(dup <= _SPAN_DUP_MAX_PPM).alias("p")]
+    return flags.select(*cols)
+
+
+def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The composed training-corpus pipeline — what the LLM-dedup operators
+    exist FOR, end to end: quality gate (text_quality composite ≥ 0.5)
+    ∧ exact-dedup keeper ∧ near-dup cluster representative. No LM stage,
+    so no LM model is built."""
     return (
-        dedup_survivors(docs, pairs)
-        .join(keepers, "doc_id", "left_semi")
-        .join(quality_ok, "doc_id")
+        _clean_flags(_t(spark, sf_dir, "documents"), lm=False, spans=False)
+        .filter("k = 1 AND s = 1 AND q = 1")
         .select("doc_id", "lang", "quality_score")
     )
 
@@ -7707,111 +7770,26 @@ def _oracle_corpus_clean() -> str:
     )
 
 
-# band tuned to the fixtures' score spread (≈4.7k–6.6k ppm — the tiny
-# synthetic vocabulary makes trigrams common): cuts both tails at every
-# SF (13+8 docs at sf0.001, 49+77 at sf0.1). The score is an INTEGER, so
-# the boundary comparison is exact in any engine.
-_LM_BAND_LO, _LM_BAND_HI = 5400, 6300
-
-
 def q_corpus_clean_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus_clean with the LM gate added — the FineWeb/CCNet-style
-    four-predicate pipeline: heuristic quality ∧ LM-score band (docs
-    whose average trigram probability is implausibly LOW are gibberish,
-    implausibly HIGH are boilerplate/templates — both cut) ∧ exact-dedup
-    keeper ∧ near-dup cluster survivor. The LM band joins as one more
-    doc_id semi-join, so the payload is still scanned once; every
-    predicate reuses its verified building block."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from overpaint_spark.operators.components import dedup_survivors
-
-    docs = _t(spark, sf_dir, "documents")
-    quality_ok = docs.select(
-        "doc_id", TX.quality_score(F.col("text")).alias("quality_score")
-    ).filter(F.col("quality_score") >= 0.5)
-    keepers = DD.exact_dedup_groups(docs).select(
-        F.col("keeper_id").alias("doc_id")
-    )
-    pairs = DD.lsh_near_dup_pairs(
-        docs, k=3, num_hashes=_MINHASH_K, bands=_MINHASH_BANDS, threshold=0.5,
-    )
-    # overlap the two independent build-time driver actions — the LM
-    # model materialization and the union-find pair collect (guide
-    # §2.6): wall = max of the two jobs instead of their sum
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_lm = pool.submit(q_text_lm_score, spark, sf_dir)
-        f_surv = pool.submit(dedup_survivors, docs, pairs)
-        lm_scored, surv = f_lm.result(), f_surv.result()
-    lm_ok = lm_scored.filter(
-        (F.col("lm_score_ppm") >= _LM_BAND_LO)
-        & (F.col("lm_score_ppm") <= _LM_BAND_HI)
-    ).select("doc_id", "lm_score_ppm")
+    """The FineWeb/CCNet-style four-predicate pipeline: heuristic
+    quality ∧ LM-score band ∧ exact-dedup keeper ∧ near-dup cluster
+    survivor."""
     return (
-        surv
-        .join(keepers, "doc_id", "left_semi")
-        .join(quality_ok, "doc_id")
-        .join(lm_ok, "doc_id")
+        _clean_flags(_t(spark, sf_dir, "documents"), lm=True, spans=False)
+        .filter("k = 1 AND s = 1 AND q = 1 AND m = 1")
         .select("doc_id", "lang", "quality_score", "lm_score_ppm")
     )
 
 
-_SPAN_DUP_MAX_PPM = 300_000
-
-
 def q_corpus_clean_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus_clean_v2 with the exact-substring-duplication gate added
-    — the five-predicate pipeline: heuristic quality ∧ LM band ∧
+    """The five-predicate pipeline: heuristic quality ∧ LM band ∧
     exact-dedup keeper ∧ near-dup cluster survivor ∧ span-duplication
-    cap (docs whose 10-token windows are > 30% cross-doc duplicated
-    are boilerplate carriers the whole-doc dedups cannot see — Lee et
-    al. 2021's motivation). The span gate is one more doc_id-keyed
-    LEFT join of the substring_span_stats relation; docs too short to
-    have any span (absent from the stats) carry no duplication
-    evidence and are KEPT (coalesce to 0), not silently dropped. The
-    cap compares exact integer ppm — no float boundary exists to flip
-    between engines. Payload still scanned once per predicate family."""
-    from overpaint_spark.operators.components import dedup_survivors
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    docs = _t(spark, sf_dir, "documents")
-    quality_ok = docs.select(
-        "doc_id", TX.quality_score(F.col("text")).alias("quality_score")
-    ).filter(F.col("quality_score") >= 0.5)
-    keepers = DD.exact_dedup_groups(docs).select(
-        F.col("keeper_id").alias("doc_id")
-    )
-    pairs = DD.lsh_near_dup_pairs(
-        docs, k=3, num_hashes=_MINHASH_K, bands=_MINHASH_BANDS, threshold=0.5,
-    )
-    spans = substring_span_stats(docs).select("doc_id", "dup_frac_ppm")
-    # overlap the LM-model materialization with the union-find pair
-    # collect (guide §2.6) — same idiom as corpus_clean_v2
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_lm = pool.submit(q_text_lm_score, spark, sf_dir)
-        f_surv = pool.submit(dedup_survivors, docs, pairs)
-        lm_scored, surv = f_lm.result(), f_surv.result()
-    lm_ok = lm_scored.filter(
-        (F.col("lm_score_ppm") >= _LM_BAND_LO)
-        & (F.col("lm_score_ppm") <= _LM_BAND_HI)
-    ).select("doc_id", "lm_score_ppm")
+    cap. Docs too short to have any span are kept with dup_frac_ppm 0,
+    not silently dropped."""
     return (
-        surv
-        .join(keepers, "doc_id", "left_semi")
-        .join(quality_ok, "doc_id")
-        .join(lm_ok, "doc_id")
-        .join(spans, "doc_id", "left")
-        .filter(F.coalesce(F.col("dup_frac_ppm"), F.lit(0)) <= _SPAN_DUP_MAX_PPM)
-        .select(
-            "doc_id",
-            "lang",
-            "quality_score",
-            "lm_score_ppm",
-            F.coalesce(F.col("dup_frac_ppm"), F.lit(0))
-            .cast("bigint")
-            .alias("dup_frac_ppm"),
-        )
+        _clean_flags(_t(spark, sf_dir, "documents"), lm=True, spans=True)
+        .filter("k = 1 AND s = 1 AND q = 1 AND m = 1 AND p = 1")
+        .select("doc_id", "lang", "quality_score", "lm_score_ppm", "dup_frac_ppm")
     )
 
 
@@ -7845,62 +7823,11 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     watches (a sudden stage-level drop means a predicate or upstream
     corpus changed); the last row equals COUNT(corpus_clean_v3) by
     construction, making the funnel a standing cross-check of the
-    flagship cleaner. ONE pass: every predicate becomes a boolean flag
-    on a single joined relation, the six cumulative counts fold in one
-    aggregate (no per-stage rescans), and stack() explodes the 1-row
-    aggregate into the 6-row report."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from overpaint_spark.operators.components import dedup_survivors
-
-    docs = _t(spark, sf_dir, "documents")
-    keepers = DD.exact_dedup_groups(docs).select(
-        F.col("keeper_id").alias("doc_id"), F.lit(1).alias("k")
-    )
-    pairs = DD.lsh_near_dup_pairs(
-        docs, k=3, num_hashes=_MINHASH_K, bands=_MINHASH_BANDS, threshold=0.5,
-    )
-    # the two BUILD-TIME driver actions — the union-find pair collect
-    # inside dedup_survivors and the LM-model materialization inside
-    # q_text_lm_score — are independent jobs; overlap them so the wall
-    # is max(pairs, model) instead of their sum (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_surv = pool.submit(dedup_survivors, docs, pairs)
-        f_lm = pool.submit(q_text_lm_score, spark, sf_dir)
-        surv = f_surv.result().select("doc_id", F.lit(1).alias("s"))
-        lm_scored = f_lm.result()
-    quality = docs.select(
-        "doc_id",
-        (TX.quality_score(F.col("text")) >= 0.5).cast("int").alias("q"),
-    )
-    lm = lm_scored.select(
-        "doc_id",
-        (
-            (F.col("lm_score_ppm") >= _LM_BAND_LO)
-            & (F.col("lm_score_ppm") <= _LM_BAND_HI)
-        ).cast("int").alias("m"),
-    )
-    spans = substring_span_stats(docs).select(
-        "doc_id",
-        (F.col("dup_frac_ppm") <= _SPAN_DUP_MAX_PPM).cast("int").alias("p"),
-    )
-    flags = (
-        docs.select("doc_id")
-        .join(keepers, "doc_id", "left")
-        .join(surv, "doc_id", "left")
-        .join(quality, "doc_id", "left")
-        .join(lm, "doc_id", "left")
-        .join(spans, "doc_id", "left")
-        .selectExpr(
-            "COALESCE(k, 0) AS k",
-            "COALESCE(s, 0) AS s",
-            "COALESCE(q, 0) AS q",
-            "COALESCE(m, 0) AS m",
-            # docs too short for any span carry no duplication evidence
-            # and pass the cap (clean_v3's coalesce-to-0 rule)
-            "COALESCE(p, 1) AS p",
-        )
-    )
+    flagship cleaner. ONE pass: the six cumulative counts fold the
+    stage flags in one aggregate (no per-stage rescans), and stack()
+    explodes the 1-row aggregate into the 6-row report. On an empty
+    corpus retained_ppm is NULL: there are no raw docs to divide by."""
+    flags = _clean_flags(_t(spark, sf_dir, "documents"), lm=True, spans=True)
     agg = flags.selectExpr(
         "CAST(COUNT(*) AS BIGINT) AS c0",
         "CAST(SUM(k) AS BIGINT) AS c1",
@@ -7922,7 +7849,7 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(stage_idx AS INT) AS stage_idx",
         "stage",
         "n_docs",
-        "n_docs * 1000000 div c0 AS retained_ppm",
+        "CASE WHEN c0 > 0 THEN n_docs * 1000000 div c0 END AS retained_ppm",
     )
 
 
@@ -8156,9 +8083,13 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring at production cadence pays ONE data-sized pass — the
     build-once/score-many split the dedup band index already has.
     Round-trip equality is pinned in tests/test_text.py."""
+    return _lm_scored(_t(spark, sf_dir, "documents"))
+
+
+def _lm_scored(d: DataFrame) -> DataFrame:
+    """text_lm_score over any documents relation (the cleaners' LM stage)."""
     from overpaint_spark.operators import lm as LM
 
-    d = _t(spark, sf_dir, "documents")
     # eager materialization of the BOUNDED model relation (≤ charset³
     # rows): without it the model-build subtree is re-executed for the
     # broadcast AND for the totals row — three corpus-sized gram
@@ -11224,7 +11155,8 @@ def q_profile_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-parent eager materializations are independent jobs; run
     # them from a small thread pool so the wall cost is the slowest
     # parent, not the sum of all of them (guide §2.6 — each job is a
-    # keys-only aggregate over one small parent table)
+    # keys-only aggregate over one small parent table); the pool threads
+    # inherit the caller's job group
     from concurrent.futures import ThreadPoolExecutor
 
     parent_cols = sorted({(e[2], e[3]) for e in edges})
@@ -11239,8 +11171,9 @@ def q_profile_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
+    tagged = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=min(8, len(parent_cols))) as pool:
-        parent_keyed = dict(pool.map(_parent_keys, parent_cols))
+        parent_keyed = dict(pool.map(tagged(_parent_keys), parent_cols))
     out = None
     for child, fk, parent, pk in edges:
         row = fk_candidate_summary(

@@ -41,8 +41,8 @@ def get_spark(app_name: str = "overpaint-spark", master: str | None = None,
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster leave it unset and let spark-submit decide. ``extra_conf``
-    lets a harness layer add session-scoped settings (e.g. the bench's
-    aggressive ContextCleaner cadence) without forking the builder.
+    lets a harness layer add session-scoped settings (e.g. a benchmark's
+    event log and scratch directories) without forking the builder.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:

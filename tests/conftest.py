@@ -15,3 +15,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def untagged_jobs(spark):
+    """Runs ``fn`` under a job group and returns the ids of the Spark jobs
+    it started outside that group (work handed to a thread that did not
+    inherit the caller's local properties)."""
+    sc = spark.sparkContext
+    status = sc.statusTracker()
+
+    def run(fn) -> list[int]:
+        before = set(status.getJobIdsForGroup(None))
+        sc.setJobGroup("untagged-jobs-check", "untagged-jobs-check", False)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sorted(set(status.getJobIdsForGroup(None)) - before)
+
+    return run

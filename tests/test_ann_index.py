@@ -44,6 +44,22 @@ def test_ann_index_roundtrip_matches_live_search(spark, tmp_path):
     assert got == live and len(got) == 30
 
 
+def test_persist_and_load_jobs_carry_callers_job_group(spark, tmp_path, untagged_jobs):
+    """persist and load run their writes and collects from thread pools;
+    every one of those jobs must carry the caller's job group."""
+    from overpaint_spark.operators.ann_index import (
+        build_ann_index,
+        load_ann_index,
+        persist_ann_index,
+    )
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx = build_ann_index(e, dim=64, n_centroids=16, n_subspaces=8, n_codes=16)
+    path = str(tmp_path / "ivfpq_index")
+    assert untagged_jobs(lambda: persist_ann_index(idx, path)) == []
+    assert untagged_jobs(lambda: load_ann_index(spark, path)) == []
+
+
 def test_ann_index_trained_centroids_build(spark, tmp_path):
     """k-means-trained centroids are a drop-in at build time; the
     persisted artifact round-trips bit-identically (same coarse/codes
