@@ -131,47 +131,27 @@ def build_ann_index(
     vec_col: str = "embedding",
 ) -> AnnIndex:
     """One assignment GEMM + one encode pass over the corpus; centroid/
-    codebook training is bounded (seeded rows or the train sample)."""
-    import numpy as np
-
+    codebook training is bounded. One id-ordered seed collect
+    (:func:`~overpaint_spark.operators.similarity.id_prefix`) serves
+    both the coarse centroids (its first ``n_centroids`` rows, or the
+    k-means init when ``train_iters > 0``) and the PQ codebook (its
+    first ``n_codes`` rows)."""
     from overpaint_spark.operators.quantization import pq_codebooks, pq_encode
     from overpaint_spark.operators.similarity import (
         assign_to_centroids,
+        id_prefix,
         train_kmeans_centroids,
     )
 
+    _, seed = id_prefix(vectors, max(n_centroids, n_codes), id_col, vec_col)
+    coarse = seed[:n_centroids]
     if train_iters > 0:
-        coarse = train_kmeans_centroids(
-            vectors, n_centroids, train_iters, id_col, vec_col
-        )
-        cb = pq_codebooks(vectors, dim, n_subspaces, n_codes, id_col, vec_col)
-    else:
-        # one seed collect serves BOTH the coarse centroids (the
-        # n_centroids lowest-id vectors — seeded_centroids' contract)
-        # and the PQ codebooks (the n_codes lowest-id vectors resliced
-        # per subspace — pq_codebooks' train_iters=0 contract): the two
-        # helpers ran the same ordered-limit job back to back (r12,
-        # guide §1.2 — don't compute things twice)
-        assert dim % n_subspaces == 0, "subspaces must divide dim"
-        m = max(n_centroids, n_codes)
-        rows = (
-            vectors.orderBy(id_col).limit(m).select(id_col, vec_col).collect()
-        )
-        seed = np.array([r[1] for r in rows], dtype=np.float64)
-        coarse = seed[:n_centroids]
-        dsub = dim // n_subspaces
-        cb = (
-            seed[:n_codes]
-            .reshape(n_codes, n_subspaces, dsub)
-            .transpose(1, 0, 2)
-            .copy()
-        )
+        coarse = train_kmeans_centroids(vectors, coarse, train_iters, vec_col)
+    cb = pq_codebooks(seed, n_subspaces, n_codes)
     assigned = assign_to_centroids(
         vectors, coarse, 1, id_col, vec_col, include_vec=False
     )
-    codes = pq_encode(
-        vectors, dim, n_subspaces, n_codes, id_col, vec_col, codebook=cb
-    )
+    codes = pq_encode(vectors, cb, id_col, vec_col)
     return AnnIndex(coarse, cb, codes.join(assigned, id_col), dim, id_col)
 
 
@@ -278,16 +258,11 @@ def encode_delta(
     from overpaint_spark.operators.quantization import pq_encode
     from overpaint_spark.operators.similarity import assign_to_centroids
 
-    n_sub = len(index.codebook)
-    n_codes = index.codebook[0].shape[0]
     assigned = assign_to_centroids(
         new_vectors, index.coarse, 1, index.id_col, vec_col,
         include_vec=False,
     )
-    codes = pq_encode(
-        new_vectors, index.dim, n_sub, n_codes, index.id_col, vec_col,
-        codebook=index.codebook,
-    )
+    codes = pq_encode(new_vectors, index.codebook, index.id_col, vec_col)
     return codes.join(assigned, index.id_col)
 
 
@@ -509,7 +484,7 @@ def ann_index_stats(
 
     Plan shape: the only data-sized input is one scan of the codes
     relation; the self-ADC LUT is C bounded rows (each cluster's
-    centroid against the K×M codebook — the exact ``lut_for`` fold the
+    centroid against the K×M codebook — the exact ``_pq_lut`` fold the
     live search broadcasts per query) broadcast-joined on cluster_id,
     the per-cluster aggregate map-side combines, and the balance
     window runs over the BOUNDED C-row relation. Thresholds →
@@ -518,25 +493,14 @@ def ann_index_stats(
 
     from pyspark.sql.window import Window
 
-    from overpaint_spark.operators.quantization import _adc_dist_expr
+    from overpaint_spark.operators.quantization import _adc_dist_expr, _pq_lut
 
     idx = load_ann_index(spark, path, id_col=id_col)  # geometry only used
     raw = _read_codes(spark, path)
     tomb = _read_tombstones(spark, path)
     n_sub = len(idx.codebook)
-    dsub = idx.dim // n_sub
-
-    def lut_for(tv):
-        return [
-            [
-                float(((tv[mi * dsub : (mi + 1) * dsub] - idx.codebook[mi][ki]) ** 2).sum())
-                for ki in range(idx.codebook[mi].shape[0])
-            ]
-            for mi in range(n_sub)
-        ]
-
     lut_rows = [
-        (int(c), lut_for(np.asarray(idx.coarse[c], dtype=np.float64)))
+        (int(c), _pq_lut(np.asarray(idx.coarse[c], dtype=np.float64), idx.codebook))
         for c in range(len(idx.coarse))
     ]
     lut_df = local_df(
@@ -595,9 +559,7 @@ def search_ann_index(
 
     spark = index.indexed.sparkSession
     q_rows = queries.select(index.id_col, vec_col).collect()
-    n_sub = len(index.codebook)
-    n_codes = index.codebook[0].shape[0]
     return _ivfpq_search(
         spark, index.indexed, index.coarse, index.codebook, q_rows,
-        index.dim, n_sub, n_codes, n_probe, k, index.id_col,
+        n_probe, k, index.id_col,
     )

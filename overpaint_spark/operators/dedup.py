@@ -512,9 +512,10 @@ def embedding_near_dup_pairs(
     cosine_sim) for every a<b pair with similarity ≥ threshold.
 
     Norms are precomputed per side so the join stage does one fold per
-    pair. This is the exact O(N²) baseline (oracle mode); at corpus
-    scale use :func:`embedding_near_dup_pairs_bucketed`, which joins
-    only within an LSH bucket.
+    pair. This is the exact O(N²) reference (oracle mode) that the
+    declared block-GEMM path, :func:`embedding_near_dup_pairs_blocked`,
+    is tested against; at corpus scale use the within-cluster SemDeDup
+    search (operators/semantic.py).
     """
     from overpaint_spark.functions import vectors as V
 
@@ -557,7 +558,8 @@ def embedding_near_dup_pairs_blocked(
     1/B; replication cost as B). Same output schema as
     :func:`embedding_near_dup_pairs`, so the variants are drop-in
     interchangeable; exact all-pairs work is inherently O(N²) — beyond
-    that budget use the LSH-bucketed approximate path below.
+    that budget use the within-cluster SemDeDup search
+    (operators/semantic.py).
     """
     import numpy as np
     import pandas as pd
@@ -615,47 +617,6 @@ def embedding_near_dup_pairs_blocked(
         )
 
     return replicated.groupBy("_bi", "_bj").applyInPandas(gemm, out_schema)
-
-
-def embedding_near_dup_pairs_bucketed(
-    emb: DataFrame,
-    dim: int,
-    threshold: float = 0.4,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate near-dup pairs: candidates share a random-hyperplane
-    LSH bucket (equi-join on the B-bit signature — E[pairs] = N²/2^B per
-    uniform bucket instead of N²), then the exact cosine filter. Recall
-    misses pairs split by a hyperplane; raise it by lowering n_planes or
-    multiprobing (see operators/similarity.py). Same output schema as
-    the exact variant, so the two are drop-in interchangeable.
-    """
-    from overpaint_spark.functions import vectors as V
-    from overpaint_spark.operators.similarity import hyperplane_signature
-
-    vec = V.as_double(F.col(vec_col))
-    prepped = emb.select(
-        F.col(id_col).alias("_id"),
-        vec.alias("_vec"),
-        V.norm(vec).alias("_norm"),
-        hyperplane_signature(vec, dim, n_planes).alias("_sig"),
-    )
-    a = prepped.select(
-        F.col("_id").alias("a_id"), F.col("_vec").alias("a_vec"),
-        F.col("_norm").alias("a_norm"), F.col("_sig").alias("a_sig"),
-    )
-    b = prepped.select(
-        F.col("_id").alias("b_id"), F.col("_vec").alias("b_vec"),
-        F.col("_norm").alias("b_norm"), F.col("_sig").alias("b_sig"),
-    )
-    sim = V.cosine(F.col("a_vec"), F.col("b_vec"), F.col("a_norm"), F.col("b_norm"))
-    return (
-        a.join(b, (F.col("a_sig") == F.col("b_sig")) & (F.col("a_id") < F.col("b_id")))
-        .select("a_id", "b_id", sim.alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= F.lit(threshold))
-    )
 
 
 SIMHASH_BITS = 64

@@ -115,55 +115,57 @@ def scalar_quantize(
 
 # --- product quantization (PQ) ---------------------------------------------
 
+def _seed_codebook(sample, n_subspaces: int, n_codes: int):
+    """(M, K, dsub) codebook whose K entries per subspace are that
+    subspace's slices of the first K seed rows — the seeded-index trick
+    that makes the declared PQ queries SQL-reproducible. Raises the
+    :data:`~overpaint_spark.operators.similarity.SEED_ERROR` ValueError
+    when the seed holds fewer than K rows."""
+    from overpaint_spark.operators.similarity import SEED_ERROR
+
+    if len(sample) < n_codes:
+        raise ValueError(
+            f"{SEED_ERROR}: a PQ codebook of {n_codes} codes needs "
+            f"{n_codes} seed rows, got {len(sample)}"
+        )
+    dim = sample.shape[1]
+    assert dim % n_subspaces == 0, "subspaces must divide dim"
+    return (
+        sample[:n_codes]
+        .reshape(n_codes, n_subspaces, dim // n_subspaces)
+        .transpose(1, 0, 2)
+        .copy()
+    )
+
+
 def pq_codebooks(
-    vectors: DataFrame,
-    dim: int,
+    sample,
     n_subspaces: int = 8,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_iters: int = 0,
     train_sample: int = 4096,
-    sample=None,
 ):
-    """Deterministic PQ codebooks (numpy, subspaces × codes × sub-dim).
+    """Deterministic PQ codebooks (numpy, subspaces × codes × sub-dim)
+    from ``sample``, an id-ordered vector matrix (the matrix half of a
+    :func:`~overpaint_spark.operators.similarity.id_prefix` seed).
 
     ``train_iters=0``: each subspace's codebook is the corresponding
-    slice of the ``n_codes`` lowest-id vectors — the seeded-index trick
-    that makes the declared query SQL-reproducible. ``train_iters>0``
+    slice of the ``n_codes`` lowest-id vectors. ``train_iters>0``
     refines each subspace with that many Lloyd's iterations (L2 mean
-    update, empty cells keep their centroid) on the ``train_sample``
-    lowest-id vectors — deterministic but no longer cheaply
+    update, empty cells keep their centroid) on the first
+    ``train_sample`` rows — deterministic but no longer cheaply
     SQL-expressible, so the trained variant stays undeclared; the
-    encode/search plans are identical either way. The sample collect is
+    encode/search plans are identical either way. The sample is
     bounded (train_sample × dim doubles) and independent of corpus
-    size — the standard PQ training recipe.
-
-    ``sample``: a numpy matrix of the lowest-id vectors IN id ORDER
-    (≥ max(n_codes, train_sample) rows, or the whole table if smaller)
-    — callers that already collected the id-ordered prefix (the
-    trained-recall report builds five tiers from one collect, guide
-    §1.2) pass it here so no Spark job runs at all; prefixes of it are
-    exactly what the two collects below would have fetched."""
+    size — the standard PQ training recipe."""
     import numpy as np
 
-    assert dim % n_subspaces == 0, "subspaces must divide dim"
-    dsub = dim // n_subspaces
-    if sample is not None:
-        mat = np.asarray(sample, dtype=np.float64)[:n_codes]
-    else:
-        rows = vectors.orderBy(id_col).limit(n_codes).select(vec_col).collect()
-        mat = np.array([r[0] for r in rows], dtype=np.float64)  # (codes, dim)
-    cb = mat.reshape(n_codes, n_subspaces, dsub).transpose(1, 0, 2).copy()
+    sample = np.asarray(sample, dtype=np.float64)
+    cb = _seed_codebook(sample, n_subspaces, n_codes)
     if train_iters <= 0:
         return cb
-    if sample is not None:
-        smat = np.asarray(sample, dtype=np.float64)[:train_sample]
-    else:
-        srows = (
-            vectors.orderBy(id_col).limit(train_sample).select(vec_col).collect()
-        )
-        smat = np.array([r[0] for r in srows], dtype=np.float64)
+    dsub = cb.shape[2]
+    smat = sample[:train_sample]
     for mi in range(n_subspaces):
         sub = smat[:, mi * dsub : (mi + 1) * dsub]
         cents = cb[mi]
@@ -182,43 +184,31 @@ def pq_codebooks(
 
 def pq_encode(
     vectors: DataFrame,
-    dim: int,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
+    codebook,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_iters: int = 0,
-    codebook=None,
     rotation=None,
 ) -> DataFrame:
     """(id, codes array<int>) — classic product quantization (Jégou et
-    al. 2011, the FAISS "PQ" tier): the vector splits into
-    ``n_subspaces`` slices, each slice coded as the index of its nearest
-    (L2) codebook entry, ties toward the lower index. At 16 codes per
-    subspace a 64-dim float32 vector compresses 256B → 4B (8× beyond
-    SQ8) while ADC search stays possible.
+    al. 2011, the FAISS "PQ" tier): the vector splits into M
+    subspaces, each slice coded as the index of its nearest (L2)
+    entry of ``codebook`` (M × K × dsub, a :func:`pq_codebooks` or
+    :func:`opq_train` result), ties toward the lower index. At 16 codes
+    per subspace a 64-dim float32 vector compresses 256B → 4B (8×
+    beyond SQ8) while ADC search stays possible.
 
     Scale shape: the codebook is tiny and rides in the task closure;
     encoding is one Arrow-batched pass — per batch, one vectorized
-    squared-distance computation per subspace against ``n_codes``
-    entries. Nothing shuffles but the output codes.
-
-    ``codebook``: a precomputed :func:`pq_codebooks` result — callers
-    that already built one (the ADC/IVF-PQ searches) pass it through so
-    the two seeding collect jobs (and any Lloyd's refinement) run
-    once, not twice.
+    squared-distance computation per subspace against K entries.
+    Nothing shuffles but the output codes.
 
     ``rotation``: an optional dim×dim orthogonal matrix applied before
     coding — the OPQ pre-transform. One GEMM per batch; the matrix
-    rides in the closure. Identity semantics when absent, so OPQ's
-    encode IS this function (r5 review finding: it was a copy)."""
+    rides in the closure."""
     import numpy as np
     import pandas as pd
 
-    cb = codebook if codebook is not None else pq_codebooks(
-        vectors, dim, n_subspaces, n_codes, id_col, vec_col,
-        train_iters=train_iters)
-    dsub = dim // n_subspaces
+    n_subspaces, _, dsub = codebook.shape
 
     def fn(batches):
         for pdf in batches:
@@ -230,7 +220,7 @@ def pq_encode(
             codes = np.empty((len(x), n_subspaces), dtype=np.int32)
             for mi in range(n_subspaces):
                 sub = x[:, mi * dsub : (mi + 1) * dsub]
-                d2 = ((sub[:, None, :] - cb[mi][None, :, :]) ** 2).sum(axis=2)
+                d2 = ((sub[:, None, :] - codebook[mi][None, :, :]) ** 2).sum(axis=2)
                 codes[:, mi] = np.argmin(d2, axis=1)  # first min = lowest code
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "codes": [list(map(int, c)) for c in codes]}
@@ -241,97 +231,73 @@ def pq_encode(
     )
 
 
+def _pq_lut(v, codebook):
+    """M×K lookup table ``LUT[m][k] = ‖v_m − cb[m][k]‖²`` of one vector
+    against the codebook — the table ADC sums per candidate. Every LUT
+    (plain, OPQ-rotated, per-probed-list residual, index self-distance)
+    is built here, so the summation order that keeps ADC distances
+    bit-reproducible in SQL cannot drift between them."""
+    dsub = codebook.shape[2]
+    return [
+        [float(((v[mi * dsub : (mi + 1) * dsub] - entry) ** 2).sum()) for entry in sub]
+        for mi, sub in enumerate(codebook)
+    ]
+
+
 def pq_adc_topk(
     candidates: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
+    q_rows,
+    codebook,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_iters: int = 0,
-    codebook=None,
-    q_rows=None,
+    rotation=None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes — the search half
-    of the PQ tier: queries stay exact, every candidate is represented
-    only by its code bytes, and the distance is the classic lookup-table
-    sum ``Σ_m LUT_q[m][code_m]`` with ``LUT_q[m][k] = ‖q_m − cb[m][k]‖²``.
+    of the PQ tier: queries (``q_rows``, collected ``(id, vec)`` rows)
+    stay exact, every candidate is represented only by its code bytes,
+    and the distance is the classic lookup-table sum
+    ``Σ_m LUT_q[m][code_m]`` (:func:`_pq_lut`).
 
     Scale shape: the per-query LUTs (|Q|·M·K doubles) are BROADCAST;
     each candidate row does M integer array lookups + a fixed-length
     add chain inside codegen — the candidate VECTORS are never read at
     search time, which is the entire point of PQ at 100 TB. One
     shuffle: the final per-query top-k window over k·|Q| surviving
-    rows. Ranking ties break on neighbor id. The left-to-right add
-    chain keeps the distance bit-reproducible in SQL.
+    rows. Ranking ties break on neighbor id.
 
-    ``codebook`` / ``q_rows``: precomputed :func:`pq_codebooks` result
-    and pre-collected ``(id, vec)`` query rows — callers building
-    several tiers over the same inputs (the trained-recall report)
-    dedupe the seeding/collect jobs this way (guide §1.2/§2.6).
-    """
-    spark = candidates.sparkSession
-    cb = codebook if codebook is not None else pq_codebooks(
-        candidates, dim, n_subspaces, n_codes, id_col, vec_col,
-        train_iters=train_iters)
-    codes = pq_encode(candidates, dim, n_subspaces, n_codes, id_col, vec_col,
-                      codebook=cb)
-    if q_rows is None:
-        q_rows = queries.select(id_col, vec_col).collect()
-    return _adc_search(
-        spark, codes, cb, q_rows, dim, n_subspaces, n_codes, k, id_col
-    )
-
-
-def _adc_search(
-    spark,
-    codes: DataFrame,
-    cb,
-    q_rows,
-    dim: int,
-    n_subspaces: int,
-    n_codes: int,
-    k: int,
-    id_col: str,
-    rotation=None,
-) -> DataFrame:
-    """Shared ADC search body — LUT build (optionally in a rotated
-    space), |Q|-row broadcast scan over code bytes, top-k window.
-    ONE copy serves pq_adc_topk and opq_adc_topk so tie-break, LUT
-    schema, and dist-expression fixes cannot drift between the tiers
-    (r5 review finding: they were near-verbatim copies)."""
+    ``rotation``: the OPQ tier (Ge et al. 2013) — an orthogonal
+    :func:`opq_train` rotation applied to candidates at encode and to
+    queries before the LUT build. Orthogonality preserves L2 exactly,
+    so the rotated search ranks the ORIGINAL space with less
+    quantization error per code byte."""
     import numpy as np
 
-    dsub = dim // n_subspaces
+    codes = pq_encode(candidates, codebook, id_col, vec_col, rotation=rotation)
     lut_rows = []
     for r in q_rows:
         qv = np.array(r[1], dtype=np.float64)
         if rotation is not None:
             qv = qv @ rotation
-        lut = [
-            [
-                float(((qv[mi * dsub : (mi + 1) * dsub] - cb[mi][ki]) ** 2).sum())
-                for ki in range(n_codes)
-            ]
-            for mi in range(n_subspaces)
-        ]
-        lut_rows.append((int(r[0]), lut))
+        lut_rows.append((int(r[0]), _pq_lut(qv, codebook)))
     lut_df = local_df(
-        spark, lut_rows, "q_id long, lut array<array<double>>"
+        candidates.sparkSession, lut_rows, "q_id long, lut array<array<double>>"
+    )
+    return _adc_topk(
+        codes.crossJoin(F.broadcast(lut_df)), len(codebook), k, id_col
     )
 
+
+def _adc_topk(joined: DataFrame, n_subspaces: int, k: int, id_col: str) -> DataFrame:
+    """Shared ranking tail of every ADC search over (code row × LUT row)
+    pairs: drop self-matches, LUT-sum the distance, keep the per-query
+    top-k (ties on neighbor id)."""
     from pyspark.sql.window import Window
 
-    scored = (
-        codes.crossJoin(F.broadcast(lut_df))
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            _adc_dist_expr(n_subspaces).alias("adc_dist"),
-        )
+    scored = joined.filter(F.col(id_col) != F.col("q_id")).select(
+        F.col("q_id").alias("query_id"),
+        F.col(id_col).alias("neighbor_id"),
+        _adc_dist_expr(n_subspaces).alias("adc_dist"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
     return (
@@ -356,50 +322,35 @@ def _adc_dist_expr(n_subspaces: int):
 # --- optimized product quantization (OPQ) ----------------------------------
 
 def opq_train(
-    vectors: DataFrame,
-    dim: int,
+    sample,
     n_subspaces: int = 8,
     n_codes: int = 16,
     n_iter: int = 5,
     train_sample: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample=None,
 ):
     """(R, codebook): an orthogonal rotation + per-subspace codebooks —
     OPQ (Ge et al. 2013, Optimized Product Quantization; FAISS's
-    ``OPQMatrix`` pre-transform). Plain PQ quantizes fixed coordinate
-    slices, so correlated/anisotropic dimensions waste code budget; OPQ
-    alternates (a) PQ codebook training in the rotated space with (b)
-    the orthogonal-Procrustes solve R = UVᵀ of SVD(XᵀX̂) that best
-    aligns the data to its own reconstruction — provably non-increasing
-    quantization error per round.
+    ``OPQMatrix`` pre-transform) — trained on the first
+    ``train_sample`` rows of ``sample``, an id-ordered vector matrix
+    (same contract as :func:`pq_codebooks`). Plain PQ quantizes fixed
+    coordinate slices, so correlated/anisotropic dimensions waste code
+    budget; OPQ alternates (a) PQ codebook training in the rotated
+    space with (b) the orthogonal-Procrustes solve R = UVᵀ of SVD(XᵀX̂)
+    that best aligns the data to its own reconstruction — provably
+    non-increasing quantization error per round. Encode and search are
+    :func:`pq_encode` / :func:`pq_adc_topk` with ``rotation=R``.
 
-    Scale shape: training runs on the bounded ``train_sample`` lowest-id
-    sample (same collect bound as pq_codebooks — sample×dim doubles,
-    independent of corpus size); each alternation is
-    sample-sized numpy. Deterministic: sample and codebook seeding are
-    id-ordered, Lloyd's updates are argmin/mean, and the SVD runs on
-    the same LAPACK everywhere a session runs — same-platform re-runs
-    are bit-identical (cross-platform bit-parity is NOT claimed, which
-    is one reason the declared query is rows-only; the other is the
-    iterative loop).
-
-    ``sample``: the id-ordered lowest-id vector matrix, if the caller
-    already collected it (same contract as :func:`pq_codebooks`) —
-    skips this function's own collect job."""
+    Scale shape: each alternation is sample-sized numpy (sample×dim
+    doubles, independent of corpus size). Deterministic: sample and
+    codebook seeding are id-ordered, Lloyd's updates are argmin/mean,
+    and the SVD runs on the same LAPACK everywhere a session runs —
+    same-platform re-runs are bit-identical (cross-platform bit-parity
+    is NOT claimed, which is one reason the declared query is
+    rows-only; the other is the iterative loop)."""
     import numpy as np
 
-    assert dim % n_subspaces == 0, "subspaces must divide dim"
-    dsub = dim // n_subspaces
-    if sample is not None:
-        X = np.asarray(sample, dtype=np.float64)[:train_sample]
-    else:
-        rows = (
-            vectors.orderBy(id_col).limit(train_sample).select(vec_col).collect()
-        )
-        X = np.array([r[0] for r in rows], dtype=np.float64)
-    R = np.eye(dim)
+    X = np.asarray(sample, dtype=np.float64)[:train_sample]
+    R = np.eye(X.shape[1])
     # codebooks seed ONCE (first n_codes rows in the initial space) and
     # PERSIST across alternations — each round refines the PREVIOUS
     # round's centroids in the current rotated space. Re-seeding every
@@ -407,11 +358,8 @@ def opq_train(
     # non-increasing-error argument, which assumes both sub-steps only
     # improve the shared objective (r5 review finding); per-round
     # monotonicity is pinned in tests now.
-    cb = (
-        X[:n_codes].reshape(n_codes, n_subspaces, dsub)
-        .transpose(1, 0, 2)
-        .copy()
-    )
+    cb = _seed_codebook(X, n_subspaces, n_codes)
+    dsub = cb.shape[2]
     for _ in range(n_iter):
         XR = X @ R
         codes = np.empty((len(XR), n_subspaces), dtype=np.int64)
@@ -434,74 +382,10 @@ def opq_train(
     return R, cb
 
 
-def opq_encode(
-    vectors: DataFrame,
-    R,
-    codebook,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): rotate then PQ-code — a thin wrapper
-    over :func:`pq_encode`'s rotation parameter (ONE encode body for
-    both tiers; r5 review finding: this was a copy). The rotation
-    matrix (dim² doubles — 32 KB at dim 64) and codebook ride in the
-    task closure; per batch one GEMM + one argmin per subspace."""
-    n_subspaces = len(codebook)
-    dsub = codebook[0].shape[1]
-    return pq_encode(
-        vectors,
-        dim=n_subspaces * dsub,
-        n_subspaces=n_subspaces,
-        n_codes=codebook[0].shape[0],
-        id_col=id_col,
-        vec_col=vec_col,
-        codebook=codebook,
-        rotation=R,
-    )
-
-
-def opq_adc_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    k: int = 5,
-    n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trained=None,
-    q_rows=None,
-) -> DataFrame:
-    """ADC top-k in the OPQ-rotated space: rotation is orthogonal, so
-    L2 distances are preserved exactly — rotating the query then
-    LUT-summing against rotated-space codes searches the ORIGINAL
-    space, just with less quantization error per code byte. Same scale
-    shape as pq_adc_topk: |Q|·M·K LUTs broadcast, candidates read code
-    bytes only, one final top-k window — the search body is the SHARED
-    :func:`_adc_search` with the rotation applied to queries.
-
-    ``trained``: a precomputed ``(R, codebook)`` from :func:`opq_train`;
-    ``q_rows``: pre-collected query rows — same dedupe contract as
-    :func:`pq_adc_topk`."""
-    spark = candidates.sparkSession
-    R, cb = trained if trained is not None else opq_train(
-        candidates, dim, n_subspaces, n_codes, n_iter=n_iter,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = opq_encode(candidates, R, cb, id_col, vec_col)
-    if q_rows is None:
-        q_rows = queries.select(id_col, vec_col).collect()
-    return _adc_search(
-        spark, codes, cb, q_rows, dim, n_subspaces, n_codes, k, id_col,
-        rotation=R,
-    )
-
-
 def ivf_pq_topk(
     candidates: DataFrame,
-    queries: DataFrame,
-    dim: int,
+    seed,
+    q_rows,
     n_centroids: int = 16,
     n_probe: int = 4,
     n_subspaces: int = 8,
@@ -510,16 +394,21 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     by_residual: bool = False,
-    q_rows=None,
-    seed_rows=None,
 ) -> DataFrame:
     """IVF-PQ — the production FAISS index shape, composed from the
     verified pieces: candidates live in coarse centroid lists
     (similarity.assign_to_centroids, cosine, seeded) and are represented
-    by PQ codes; a query probes its ``n_probe`` nearest lists and scores
-    ONLY those lists' members by ADC lookup — expected work per query is
+    by PQ codes; a query (``q_rows``, collected ``(id, vec)`` rows)
+    probes its ``n_probe`` nearest lists and scores ONLY those lists'
+    members by ADC lookup — expected work per query is
     ``n_probe·N/C`` LUT-sums over code bytes, with neither candidate
     vectors nor out-of-probe lists ever touched.
+
+    ``seed``: an :func:`~overpaint_spark.operators.similarity.id_prefix`
+    ``(ids, matrix)`` of at least max(n_centroids, n_codes) rows (or the
+    whole table if smaller). The coarse centroids are its first
+    ``n_centroids`` rows, the raw-path PQ codebook its first ``n_codes``
+    rows — callers building several tiers pass one seed to all of them.
 
     ``by_residual=False`` codes RAW vectors (FAISS ``by_residual=false``)
     so the whole index stays SQL-reproducible — this is the declared
@@ -529,37 +418,16 @@ def ivf_pq_topk(
     code budget quantizes finer), and the per-(query, probed-list) LUT
     becomes ``‖(q − c_list)_m − cb[m][k]‖²`` — same join/scan shape, one
     extra zip_with in the encode stage, still deterministic (seeded
-    residual codebook) but not cheaply SQL-expressible, so it stays
-    undeclared and is property-tested instead (recall ≥ raw at equal
-    n_probe, distances consistent with an exact numpy re-derivation;
+    residual codebook). Declared as ``ann_topk_ivfpq_residual`` and
+    also property-tested (recall ≥ raw at equal n_probe on clustered
+    data, distances consistent with an exact numpy re-derivation;
     tests/test_quantization.py). One shuffle: the cluster_id equi-join
     (query side broadcast); plus the final top-k window."""
-    import numpy as np
-
-    from overpaint_spark.operators.similarity import assign_to_centroids
+    from overpaint_spark.operators.similarity import assign_to_centroids, id_prefix
 
     spark = candidates.sparkSession
-    # ONE ordered-limit collect seeds everything driver-side (guide
-    # §1.2): the coarse centroids (n_centroids lowest ids), the raw-path
-    # PQ codebook (n_codes lowest ids — a prefix of the same ordered
-    # rows), and the residual path's seed_max boundary (the max of the
-    # n_centroids lowest ids IS the last seed row's id). Previously
-    # these were two to three separate ordered-limit jobs over the same
-    # relation. Callers holding a longer id-ordered (id, vec) prefix
-    # (``seed_rows``) or pre-collected query rows (``q_rows``) pass
-    # them in — the recall report shares one collect across its tiers.
-    if seed_rows is None:
-        seed_rows = (
-            candidates.orderBy(id_col)
-            .limit(max(n_centroids, n_codes))
-            .select(id_col, vec_col)
-            .collect()
-        )
-    coarse = np.array(
-        [r[1] for r in seed_rows[:n_centroids]], dtype=np.float64
-    )
-    dsub = dim // n_subspaces
-
+    ids, mat = seed
+    coarse = mat[:n_centroids]
     c_assigned = assign_to_centroids(
         candidates, coarse, 1, id_col, vec_col, include_vec=False
     )
@@ -593,26 +461,18 @@ def ivf_pq_topk(
         # would embed C literals in the plan (C = N/125 now that the
         # geometry scales; r5 review finding), and only the boundary
         # value crosses to the driver.
-        seed_max = seed_rows[: n_centroids][-1][0]
-        cb_source = to_code.filter(F.col(id_col) > seed_max)
-        cb = pq_codebooks(cb_source, dim, n_subspaces, n_codes, id_col, vec_col)
+        seed_max = int(ids[:n_centroids][-1])
+        _, residuals = id_prefix(
+            to_code.filter(F.col(id_col) > seed_max), n_codes, id_col, vec_col
+        )
+        cb = pq_codebooks(residuals, n_subspaces, n_codes)
     else:
         to_code = candidates
-        cb = pq_codebooks(
-            candidates, dim, n_subspaces, n_codes, id_col, vec_col,
-            sample=np.array(
-                [r[1] for r in seed_rows[:n_codes]], dtype=np.float64
-            ),
-        )
-    codes = pq_encode(to_code, dim, n_subspaces, n_codes, id_col, vec_col,
-                      codebook=cb)
+        cb = pq_codebooks(mat, n_subspaces, n_codes)
+    codes = pq_encode(to_code, cb, id_col, vec_col)
     indexed = codes.join(c_assigned, id_col)
-
-    if q_rows is None:
-        q_rows = queries.select(id_col, vec_col).collect()
     return _ivfpq_search(
-        spark, indexed, coarse, cb, q_rows, dim, n_subspaces, n_codes,
-        n_probe, k, id_col, by_residual,
+        spark, indexed, coarse, cb, q_rows, n_probe, k, id_col, by_residual
     )
 
 
@@ -622,9 +482,6 @@ def _ivfpq_search(
     coarse,
     cb,
     q_rows,
-    dim: int,
-    n_subspaces: int,
-    n_codes: int,
     n_probe: int,
     k: int,
     id_col: str,
@@ -637,18 +494,7 @@ def _ivfpq_search(
     live and loaded indexes can never diverge in search semantics."""
     import numpy as np
 
-    dsub = dim // n_subspaces
     cnorm = np.linalg.norm(coarse, axis=1)
-
-    def lut_for(tv):
-        return [
-            [
-                float(((tv[mi * dsub : (mi + 1) * dsub] - cb[mi][ki]) ** 2).sum())
-                for ki in range(n_codes)
-            ]
-            for mi in range(n_subspaces)
-        ]
-
     lut_rows = []
     for r in q_rows:
         qv = np.array(r[1], dtype=np.float64)
@@ -659,30 +505,15 @@ def _ivfpq_search(
         # raw coding: the LUT depends only on qv — build once, not per
         # probed list (residual coding shifts it by the list centroid,
         # so there it is genuinely per-(query, list))
-        shared = None if by_residual else lut_for(qv)
+        shared = None if by_residual else _pq_lut(qv, cb)
         for cid in probes:
-            lut = lut_for(qv - coarse[cid]) if by_residual else shared
+            lut = _pq_lut(qv - coarse[cid], cb) if by_residual else shared
             lut_rows.append((int(r[0]), int(cid), lut))
     lut_df = local_df(
         spark, lut_rows, "q_id long, cluster_id int, lut array<array<double>>"
     )
-
-    from pyspark.sql.window import Window
-
-    scored = (
-        indexed.join(F.broadcast(lut_df), "cluster_id")
-        .filter(F.col(id_col) != F.col("q_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            _adc_dist_expr(n_subspaces).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _adc_topk(
+        indexed.join(F.broadcast(lut_df), "cluster_id"), len(cb), k, id_col
     )
 
 

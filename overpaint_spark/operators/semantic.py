@@ -37,29 +37,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from overpaint_spark.functions import vectors as V
-from overpaint_spark.operators.similarity import (
-    assign_to_centroids,
-    seeded_centroids,
-    train_kmeans_centroids,
-)
+from overpaint_spark.operators.similarity import assign_to_centroids, id_prefix
 
 
 def cluster_assignments(
     vectors: DataFrame,
     n_centroids: int = 16,
-    train_iters: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, vec, cluster_id) with each vector assigned to its nearest
-    centroid. ``train_iters=0`` seeds centroids from the ``n_centroids``
-    lowest-id vectors (deterministic, oracle-reproducible);
-    ``train_iters>0`` runs distributed k-means rounds first — same plan
-    shape either way."""
-    if train_iters > 0:
-        cmat = train_kmeans_centroids(vectors, n_centroids, train_iters, id_col, vec_col)
-    else:
-        cmat = seeded_centroids(vectors, n_centroids, id_col, vec_col)
+    centroid; the centroids are the ``n_centroids`` lowest-id vectors
+    (:func:`~overpaint_spark.operators.similarity.id_prefix`:
+    deterministic, oracle-reproducible)."""
+    _, cmat = id_prefix(vectors, n_centroids, id_col, vec_col)
     return assign_to_centroids(vectors, cmat, 1, id_col, vec_col)
 
 
@@ -97,7 +88,6 @@ def semantic_dedup_survivors(
     vectors: DataFrame,
     n_centroids: int = 16,
     tau: float = 0.4,
-    train_iters: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -106,7 +96,7 @@ def semantic_dedup_survivors(
     set is a DISTINCT projection of the pair relation's high side; the
     survivor filter is a broadcast-able left-anti join on id — the
     vector payload is never shuffled a second time."""
-    assigned = cluster_assignments(vectors, n_centroids, train_iters, id_col, vec_col)
+    assigned = cluster_assignments(vectors, n_centroids, id_col, vec_col)
     pairs = semantic_dup_pairs(assigned, tau, id_col, vec_col)
     dropped = pairs.select(F.col("b_id").alias(id_col)).distinct()
     return assigned.join(dropped, id_col, "left_anti").select(id_col, "cluster_id")

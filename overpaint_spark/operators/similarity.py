@@ -198,19 +198,15 @@ def lsh_topk(
 
 def train_kmeans_centroids(
     vectors: DataFrame,
-    n_centroids: int = 16,
+    init,
     n_iter: int = 5,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    init=None,
 ):
     """Distributed Lloyd's k-means (cosine assignment, mean update) for
     IVF centroid training; returns the centroid matrix (numpy, C×dim).
 
-    ``init``: a precomputed C×dim init matrix (the ``n_centroids``
-    lowest-id vectors in id order — exactly what the collect below
-    fetches); callers that already hold the id-ordered sample pass it
-    to skip the init collect job (guide §1.2).
+    ``init``: the C×dim init matrix — by convention the C lowest-id
+    vectors in id order, sliced from an :func:`id_prefix` seed.
 
     Communication-optimal shape: each Arrow batch assigns its vectors
     with one GEMM against the (small, broadcast-by-closure) centroid
@@ -220,9 +216,9 @@ def train_kmeans_centroids(
     loop (same state shape as MLlib's); iterations are few (IVF needs
     balanced-ish lists, not converged clusters).
 
-    Deterministic: init is the ``n_centroids`` lowest-id vectors, ties in
-    assignment break toward the lower centroid index, empty clusters
-    keep their previous centroid.
+    Deterministic: given the init, ties in assignment break toward the
+    lower centroid index and empty clusters keep their previous
+    centroid.
 
     Past ``_TWO_LEVEL_MIN_C`` centroids each iteration's assignment GEMM
     switches to the shared two-level coarse→fine core
@@ -233,13 +229,7 @@ def train_kmeans_centroids(
     import numpy as np
     import pandas as pd
 
-    if init is not None:
-        cmat = np.asarray(init, dtype=np.float64)[:n_centroids].copy()
-    else:
-        init_rows = (
-            vectors.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-        )
-        cmat = np.array([r[0] for r in init_rows], dtype=np.float64)
+    cmat = np.array(init, dtype=np.float64)
     src = vectors.select(vec_col)
 
     for _ in range(n_iter):
@@ -299,22 +289,39 @@ def train_kmeans_centroids(
     return cmat
 
 
-def seeded_centroids(
-    candidates: DataFrame,
-    n_centroids: int = 16,
+# Fixed prefix of the ValueError raised when an ANN seed is too short
+# to build from: an empty table, or fewer rows than a PQ codebook's K.
+SEED_ERROR = "ANN seed too short"
+
+
+def id_prefix(
+    df: DataFrame,
+    n: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Deterministic centroid matrix: the ``n_centroids`` lowest-id
-    vectors. No training job — one tiny ordered-limit collect — and
-    fully reproducible in SQL (``ORDER BY id LIMIT C``), which is what
-    makes IVF/SemDeDup queries oracle-checkable."""
+    """``(ids, matrix)``: the ``n`` lowest-id vectors in id order, as an
+    int64 id array and a float64 row matrix — the one seed every ANN
+    tier builds from. IVF centroids and the k-means init are its first
+    C rows, PQ/OPQ codebooks and their training samples its first K (or
+    ``train_sample``) rows, so a caller building several tiers collects
+    the longest prefix once and slices it. One ordered-limit collect,
+    reproducible in SQL (``ORDER BY id LIMIT n``) — which is what makes
+    the seeded IVF/PQ/SemDeDup queries oracle-checkable.
+
+    Raises ``ValueError`` with a message starting with
+    :data:`SEED_ERROR` when ``df`` has no rows;
+    :func:`overpaint_spark.operators.quantization.pq_codebooks` raises
+    the same error when a prefix holds fewer rows than its K codes."""
     import numpy as np
 
-    cent_rows = (
-        candidates.orderBy(id_col).limit(n_centroids).select(id_col, vec_col).collect()
+    rows = df.orderBy(id_col).limit(n).select(id_col, vec_col).collect()
+    if not rows:
+        raise ValueError(f"{SEED_ERROR}: no rows to seed from")
+    return (
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([r[1] for r in rows], dtype=np.float64),
     )
-    return np.array([r[1] for r in cent_rows], dtype=np.float64)
 
 
 # Past this many centroids the flat N·C GEMM becomes the documented
@@ -385,7 +392,7 @@ def assign_to_centroids(
 def _centroid_groups(cmat, n_groups: int):
     """Deterministic coarse grouping of the centroid matrix: the
     ``n_groups`` lowest-index centroids serve as group representatives
-    (the same seeding convention as :func:`seeded_centroids`), and every
+    (the same seeding convention as :func:`id_prefix`), and every
     centroid joins its max-cosine representative (ties toward the lower
     group index — same tie rule as vector assignment). Driver-side
     numpy: C·G flops ONCE per index build, amortized over every batch.
@@ -680,27 +687,21 @@ def hamming_rerank_topk(
 def ivf_topk(
     candidates: DataFrame,
     queries: DataFrame,
+    centroids,
     k: int = 5,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    train_iters: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids=None,
 ) -> DataFrame:
     """Approximate top-k via an IVF index: vectors are bucketed by their
     nearest centroid, queries probe only their ``n_probe`` closest
     centroid lists.
 
-    ``centroids``: a precomputed C×dim centroid matrix — callers that
-    already seeded or trained one (the trained-recall report) pass it
-    so no seeding/training job runs here (guide §1.2).
-
-    - Centroids: ``train_iters=0`` takes the ``n_centroids`` lowest-id
-      vectors (deterministic, no training job); ``train_iters>0`` runs
-      that many distributed k-means rounds first
-      (:func:`train_kmeans_centroids`) for better-balanced lists —
-      the search plan shape is identical either way.
+    - ``centroids``: the C×dim centroid matrix — seeded (the C lowest-id
+      vectors of an :func:`id_prefix` seed: deterministic, no training
+      job) or k-means-trained (:func:`train_kmeans_centroids`) for
+      better-balanced lists; the search plan shape is identical either
+      way.
     - Assignment is Arrow-batched (one GEMM per batch against the small
       centroid matrix) — the 100 TB path: each vector is scored against
       C centroids, not N vectors.
@@ -708,17 +709,8 @@ def ivf_topk(
       (equi-join, broadcastable query side) — expected pair count is
       |Q| · n_probe · N/C instead of |Q| · N.
     """
-    if centroids is not None:
-        cmat = centroids
-    elif train_iters > 0:
-        cmat = train_kmeans_centroids(
-            candidates, n_centroids, train_iters, id_col, vec_col
-        )
-    else:
-        cmat = seeded_centroids(candidates, n_centroids, id_col, vec_col)
-
-    c_assigned = assign_to_centroids(candidates, cmat, 1, id_col, vec_col)
-    q_assigned = assign_to_centroids(queries, cmat, n_probe, id_col, vec_col)
+    c_assigned = assign_to_centroids(candidates, centroids, 1, id_col, vec_col)
+    q_assigned = assign_to_centroids(queries, centroids, n_probe, id_col, vec_col)
 
     c = c_assigned.select(
         F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"),

@@ -1772,7 +1772,7 @@ def q_corpus_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     d = _t(spark, sf_dir, "documents")
     n_cent, _ = _ivf_params(sf_dir)
-    cmat = SIM.seeded_centroids(e, n_centroids=n_cent)
+    _, cmat = SIM.id_prefix(e, n_cent)
     asg = SIM.assign_to_centroids(e, cmat, include_vec=False).select(
         F.col("vec_id").alias("doc_id"), "cluster_id"
     )
@@ -3216,7 +3216,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     n_cent, _ = _ivf_params(sf_dir)
-    cmat = SIM.seeded_centroids(e, n_centroids=n_cent)
+    _, cmat = SIM.id_prefix(e, n_cent)
     asg = SIM.assign_to_centroids(e, cmat, include_vec=False).select(
         "vec_id", "cluster_id"
     )
@@ -4544,9 +4544,9 @@ def _ivf_params(sf_dir: str) -> tuple[int, int]:
 
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-partitioned top-k (Arrow-batched centroid assignment, probe-
-    limited search). With seeded centroids (train_iters=0: the C
-    lowest-id vectors, C = max(16, N/125) per _IVF_LIST_TARGET) the
-    whole index is DETERMINISTIC, so unlike generic IVF this declared
+    limited search). With seeded centroids (the C lowest-id vectors,
+    C = max(16, N/125) per _IVF_LIST_TARGET) the whole index is
+    DETERMINISTIC, so unlike generic IVF this declared
     variant is fully oracle-checkable — the SQL twin rebuilds the same
     assignment (argmax cosine, ties toward the lower centroid index)
     and probe set from the same GREATEST(16, COUNT/125) formula.
@@ -4556,9 +4556,9 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pinned in tests/test_similarity.py."""
     e = _t(spark, sf_dir, "embeddings")
     n_cent, n_probe = _ivf_params(sf_dir)
+    _, cmat = SIM.id_prefix(e, n_cent)
     out = SIM.ivf_topk(
-        e, e.filter(F.col("vec_id") < 10), k=5,
-        n_centroids=n_cent, n_probe=n_probe,
+        e, e.filter(F.col("vec_id") < 10), cmat, k=5, n_probe=n_probe
     )
     return out.select(
         "query_id", "neighbor_id", "rank", F.round("cosine_sim", 4).alias("cosine_sim_r")
@@ -4647,7 +4647,7 @@ def q_embedding_centroid_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't-straddle-a-boundary argument as ann_knn_accuracy."""
     e = _t(spark, sf_dir, "embeddings")
     n_cent, _ = _ivf_params(sf_dir)
-    cmat = SIM.seeded_centroids(e, n_centroids=n_cent)
+    _, cmat = SIM.id_prefix(e, n_cent)
     asg = SIM.assign_to_centroids(e, cmat, include_vec=False).select(
         "vec_id", "cluster_id"
     )
@@ -4764,11 +4764,9 @@ def q_ann_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one seeding collect shared by all three probe tiers (they differ
     # only in n_probe; the centroid matrix is identical — guide §1.2)
-    cmat = SIM.seeded_centroids(e, n_centroids=n_cent)
+    _, cmat = SIM.id_prefix(e, n_cent)
     parts = [
-        SIM.ivf_topk(
-            e, q, k=5, n_centroids=n_cent, n_probe=pp, centroids=cmat
-        ).select(
+        SIM.ivf_topk(e, q, cmat, k=5, n_probe=pp).select(
             F.lit(pp).cast("int").alias("n_probe"), "query_id", "neighbor_id"
         )
         for pp in (1, p // 2, p)
@@ -4995,6 +4993,16 @@ def _oracle_embedding_sq8_error() -> str:
 
 
 _PQ_M, _PQ_K = 8, 16
+# opq_train's default sample bound: the OPQ tiers train on this many
+# lowest-id vectors
+_OPQ_TRAIN_SAMPLE = 4096
+
+
+def _q_rows(e: DataFrame) -> list:
+    """The declared ANN queries' query side (vec_id < 10) as collected
+    ``(id, vec)`` rows — the form the ADC/IVF-PQ searches build their
+    per-query lookup tables from."""
+    return e.filter(F.col("vec_id") < 10).select("vec_id", "embedding").collect()
 
 
 def q_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5007,10 +5015,9 @@ def q_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate vs exact cosine by construction; recall pinned in
     tests/test_quantization.py."""
     e = _t(spark, sf_dir, "embeddings")
-    out = QZ.pq_adc_topk(
-        e, e.filter(F.col("vec_id") < 10),
-        dim=_QUANT_DIM, n_subspaces=_PQ_M, n_codes=_PQ_K, k=5,
-    )
+    _, seed = SIM.id_prefix(e, _PQ_K)
+    cb = QZ.pq_codebooks(seed, _PQ_M, _PQ_K)
+    out = QZ.pq_adc_topk(e, _q_rows(e), cb, k=5)
     return out.select(
         "query_id", "neighbor_id", "rank", F.round("adc_dist", 4).alias("adc_dist_r")
     )
@@ -5062,7 +5069,8 @@ def q_embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured per subspace at sf0.001/0.01/0.1) — ten orders above
     cross-engine float noise. Output is pure integers."""
     e = _t(spark, sf_dir, "embeddings")
-    out = QZ.pq_encode(e, dim=_QUANT_DIM, n_subspaces=_PQ_M, n_codes=_PQ_K)
+    _, seed = SIM.id_prefix(e, _PQ_K)
+    out = QZ.pq_encode(e, QZ.pq_codebooks(seed, _PQ_M, _PQ_K))
     return out.select(
         "vec_id", *[F.col("codes")[m].alias(f"pq_{m}") for m in range(_PQ_M)]
     )
@@ -5103,8 +5111,8 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     n_cent, n_probe = _ivf_params(sf_dir)
     out = QZ.ivf_pq_topk(
-        e, e.filter(F.col("vec_id") < 10),
-        dim=_QUANT_DIM, n_centroids=n_cent, n_probe=n_probe,
+        e, SIM.id_prefix(e, max(n_cent, _PQ_K)), _q_rows(e),
+        n_centroids=n_cent, n_probe=n_probe,
         n_subspaces=_PQ_M, n_codes=_PQ_K, k=5,
     )
     return out.select(
@@ -5413,8 +5421,8 @@ def q_ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     n_cent, n_probe = _ivf_params(sf_dir)
     out = QZ.ivf_pq_topk(
-        e, e.filter(F.col("vec_id") < 10),
-        dim=_QUANT_DIM, n_centroids=n_cent, n_probe=n_probe,
+        e, SIM.id_prefix(e, max(n_cent, _PQ_K)), _q_rows(e),
+        n_centroids=n_cent, n_probe=n_probe,
         n_subspaces=_PQ_M, n_codes=_PQ_K, k=5, by_residual=True,
     )
     return out.select(
@@ -5593,8 +5601,6 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim everywhere. Deterministic: every tier is seeded (same
     indexes the declared ann_topk_* queries build), so the hit counts
     are exact integers."""
-    import numpy as np
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     n_cent, n_probe = _ivf_params(sf_dir)
@@ -5605,40 +5611,23 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coarse seeds, raw PQ codebook and q_rows are all prefixes/subsets
     # of the lowest-id rows (ids < 10 are necessarily among the lowest
     # max(C, K) ≥ 16 non-negative ids). Was ~7 serial collect jobs.
-    seed_rows = (
-        e.orderBy("vec_id")
-        .limit(max(n_cent, _PQ_K))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    q_rows = [r for r in seed_rows if r[0] < 10]
-    cb_full = QZ.pq_codebooks(
-        e, _QUANT_DIM, _PQ_M, _PQ_K,
-        sample=np.array([r[1] for r in seed_rows[:_PQ_K]], dtype=np.float64),
+    seed = SIM.id_prefix(e, max(n_cent, _PQ_K))
+    q_rows = [(i, v) for i, v in zip(*seed) if i < 10]
+    ivfpq = dict(
+        n_centroids=n_cent, n_probe=n_probe, n_subspaces=_PQ_M,
+        n_codes=_PQ_K, k=5,
     )
     tiers = [
         (
             "pq_adc_full",
             QZ.pq_adc_topk(
-                e, q, dim=_QUANT_DIM, n_subspaces=_PQ_M, n_codes=_PQ_K, k=5,
-                codebook=cb_full, q_rows=q_rows,
+                e, q_rows, QZ.pq_codebooks(seed[1], _PQ_M, _PQ_K), k=5
             ),
         ),
-        (
-            "ivfpq_raw",
-            QZ.ivf_pq_topk(
-                e, q, dim=_QUANT_DIM, n_centroids=n_cent, n_probe=n_probe,
-                n_subspaces=_PQ_M, n_codes=_PQ_K, k=5,
-                seed_rows=seed_rows, q_rows=q_rows,
-            ),
-        ),
+        ("ivfpq_raw", QZ.ivf_pq_topk(e, seed, q_rows, **ivfpq)),
         (
             "ivfpq_residual",
-            QZ.ivf_pq_topk(
-                e, q, dim=_QUANT_DIM, n_centroids=n_cent, n_probe=n_probe,
-                n_subspaces=_PQ_M, n_codes=_PQ_K, k=5, by_residual=True,
-                seed_rows=seed_rows, q_rows=q_rows,
-            ),
+            QZ.ivf_pq_topk(e, seed, q_rows, by_residual=True, **ivfpq),
         ),
     ]
     parts = [
@@ -5724,52 +5713,22 @@ def q_ann_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     sample = 1024
-    srows = (
-        e.orderBy("vec_id")
-        .limit(max(4096, n_cent))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    X_all = np.array([r[1] for r in srows], dtype=np.float64)
-    q_rows = [r for r in srows if r[0] < 10]
-    cmat_seed = X_all[:n_cent].copy()
-    cmat_trained = SIM.train_kmeans_centroids(
-        e, n_cent, n_iter=3, init=cmat_seed
-    )
-    cb_seed = QZ.pq_codebooks(e, _QUANT_DIM, _PQ_M, _PQ_K, sample=X_all)
-    cb_tr_tier = QZ.pq_codebooks(
-        e, _QUANT_DIM, _PQ_M, _PQ_K, train_iters=5, sample=X_all
-    )
-    opq_tier = QZ.opq_train(
-        e, _QUANT_DIM, _PQ_M, _PQ_K, n_iter=5, sample=X_all
-    )
-    common = dict(dim=_QUANT_DIM, n_subspaces=_PQ_M, n_codes=_PQ_K, k=5)
+    seed = SIM.id_prefix(e, max(_OPQ_TRAIN_SAMPLE, n_cent))
+    X_all = seed[1]
+    q_rows = [(i, v) for i, v in zip(*seed) if i < 10]
+    cmat_seed = X_all[:n_cent]
+    cmat_trained = SIM.train_kmeans_centroids(e, cmat_seed, n_iter=3)
+    cb_seed = QZ.pq_codebooks(X_all, _PQ_M, _PQ_K)
+    cb_tr_tier = QZ.pq_codebooks(X_all, _PQ_M, _PQ_K, train_iters=5)
+    R_tier, cb_opq_tier = QZ.opq_train(X_all, _PQ_M, _PQ_K, n_iter=5)
     tiers = [
-        (
-            "ivf_seeded",
-            SIM.ivf_topk(
-                e, q, k=5, n_centroids=n_cent, n_probe=n_probe,
-                centroids=cmat_seed,
-            ),
-        ),
-        (
-            "ivf_trained",
-            SIM.ivf_topk(
-                e, q, k=5, n_centroids=n_cent, n_probe=n_probe,
-                centroids=cmat_trained,
-            ),
-        ),
-        (
-            "pq_adc_seeded",
-            QZ.pq_adc_topk(e, q, codebook=cb_seed, q_rows=q_rows, **common),
-        ),
-        (
-            "pq_adc_trained",
-            QZ.pq_adc_topk(e, q, codebook=cb_tr_tier, q_rows=q_rows, **common),
-        ),
+        ("ivf_seeded", SIM.ivf_topk(e, q, cmat_seed, k=5, n_probe=n_probe)),
+        ("ivf_trained", SIM.ivf_topk(e, q, cmat_trained, k=5, n_probe=n_probe)),
+        ("pq_adc_seeded", QZ.pq_adc_topk(e, q_rows, cb_seed, k=5)),
+        ("pq_adc_trained", QZ.pq_adc_topk(e, q_rows, cb_tr_tier, k=5)),
         (
             "opq_adc",
-            QZ.opq_adc_topk(e, q, trained=opq_tier, q_rows=q_rows, **common),
+            QZ.pq_adc_topk(e, q_rows, cb_opq_tier, k=5, rotation=R_tier),
         ),
     ]
     parts = [
@@ -5808,13 +5767,9 @@ def q_ann_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         return err / Xs.size
 
     cb_tr = QZ.pq_codebooks(
-        e, _QUANT_DIM, _PQ_M, _PQ_K, train_iters=5, train_sample=sample,
-        sample=X_all,
+        X_all, _PQ_M, _PQ_K, train_iters=5, train_sample=sample
     )
-    R, cb_opq = QZ.opq_train(
-        e, _QUANT_DIM, _PQ_M, _PQ_K, n_iter=5, train_sample=sample,
-        sample=X_all,
-    )
+    R, cb_opq = QZ.opq_train(X_all, _PQ_M, _PQ_K, n_iter=5, train_sample=sample)
     m_seed, m_tr, m_opq = mse(X, cb_seed), mse(X, cb_tr), mse(X @ R, cb_opq)
 
     def ppm(a: float, b: float) -> int:
@@ -5940,10 +5895,9 @@ def q_ann_topk_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines is not claimable); quality and determinism are
     pinned in tests instead."""
     e = _t(spark, sf_dir, "embeddings")
-    out = QZ.opq_adc_topk(
-        e, e.filter(F.col("vec_id") < 10),
-        dim=_QUANT_DIM, n_subspaces=_PQ_M, n_codes=_PQ_K, k=5,
-    )
+    _, sample = SIM.id_prefix(e, _OPQ_TRAIN_SAMPLE)
+    R, cb = QZ.opq_train(sample, _PQ_M, _PQ_K)
+    out = QZ.pq_adc_topk(e, _q_rows(e), cb, k=5, rotation=R)
     return out.select(
         "query_id", "neighbor_id", "rank",
         F.round("adc_dist", 4).alias("adc_dist_r"),
@@ -6147,10 +6101,9 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored with one BLAS GEMM in applyInPandas — no driver collect(),
     no task-closure matrix, executor memory bounded at 2·N/B vectors
     per task. (The fold-based DataFrame variant is ~20× slower at 5k
-    vectors; the LSH-bucketed approximate scale path is
-    dedup.embedding_near_dup_pairs_bucketed, verified a subset of this
-    in tests.) Fixture margins to the 0.4 threshold are ≥ 9.8e-6 — far
-    above cross-engine float noise."""
+    vectors; the approximate scale path is the within-cluster SemDeDup
+    search, `semantic_dedup`.) Fixture margins to the 0.4 threshold are
+    ≥ 9.8e-6 — far above cross-engine float noise."""
     e = _t(spark, sf_dir, "embeddings")
     out = DD.embedding_near_dup_pairs_blocked(e, threshold=0.4, n_blocks=8)
     return out.select(

@@ -19,16 +19,18 @@ def test_ann_index_roundtrip_matches_live_search(spark, tmp_path):
         search_ann_index,
     )
     from overpaint_spark.operators.quantization import ivf_pq_topk
+    from overpaint_spark.operators.similarity import id_prefix
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 6)
+    q_rows = q.select("vec_id", "embedding").collect()
     key = lambda r: (r.query_id, r.neighbor_id, r.rank, round(r.adc_dist, 9))  # noqa: E731
 
     live = sorted(
         map(
             key,
             ivf_pq_topk(
-                e, q, dim=64, n_centroids=16, n_probe=4,
+                e, id_prefix(e, 16), q_rows, n_centroids=16, n_probe=4,
                 n_subspaces=8, n_codes=16, k=5,
             ).collect(),
         )

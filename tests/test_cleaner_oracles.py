@@ -2,7 +2,12 @@
 fixture and on an empty corpus. Every declared query must either match
 its oracle on a degenerate input or fail with a named error; the empty
 corpus is the degenerate input every cleaning stage meets first (a new
-source, a filter upstream that drops everything)."""
+source, a filter upstream that drops everything).
+
+The same contract for the seeded ANN family (every query whose index
+seeds from the lowest-id vectors, operators/similarity.id_prefix): the
+oracle-backed ones match on the smoke fixture, and on an empty
+embeddings table all of them raise the named seed error."""
 
 import os
 import sys
@@ -12,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from overpaint_spark import queries as Q
+from overpaint_spark.operators.similarity import SEED_ERROR
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 from oracle_check import compare  # noqa: E402
@@ -24,6 +30,20 @@ CLEANERS = [
     "corpus_pipeline",
     "text_lm_score",
 ]
+
+SEEDED_ORACLED = [
+    "ann_topk_ivf",
+    "ann_ivf_probe_curve",
+    "ann_topk_pq",
+    "embedding_pq_codes",
+    "ann_topk_ivfpq",
+    "ann_topk_ivfpq_residual",
+    "ann_ivfpq_recall",
+    "semantic_dedup",
+    "embedding_centroid_purity",
+]
+# rows-only by design: iterative training loops with no SQL form
+SEEDED = SEEDED_ORACLED + ["ann_topk_opq", "ann_trained_recall"]
 
 
 @pytest.fixture(scope="module")
@@ -40,10 +60,35 @@ def test_cleaner_matches_oracle(spark, sf_dir, tmp_path, oracles, name, corpus):
         pq.write_table(docs.slice(0, 0), tmp_path / "documents.parquet")
         root = str(tmp_path)
     got = Q.QUERIES[name](spark, root).toPandas()
+    assert compare(name, got, _oracle_rows(root, oracles[name])) == []
+
+
+def _oracle_rows(root, sql):
     con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{root}/documents.parquet'")
-    want = con.sql(oracles[name]).df()
-    assert compare(name, got, want) == []
+    for table in ("documents", "embeddings"):
+        if os.path.exists(f"{root}/{table}.parquet"):
+            con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{root}/{table}.parquet'")
+    return con.sql(sql).df()
+
+
+@pytest.mark.parametrize("name", SEEDED_ORACLED)
+def test_seeded_ann_matches_oracle(spark, sf_dir, oracles, name):
+    got = Q.QUERIES[name](spark, sf_dir).toPandas()
+    assert compare(name, got, _oracle_rows(sf_dir, oracles[name])) == []
+
+
+@pytest.fixture(scope="module")
+def empty_embeddings(sf_dir, tmp_path_factory):
+    root = tmp_path_factory.mktemp("empty_embeddings")
+    vecs = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    pq.write_table(vecs.slice(0, 0), root / "embeddings.parquet")
+    return str(root)
+
+
+@pytest.mark.parametrize("name", SEEDED)
+def test_seeded_ann_empty_raises_seed_error(spark, empty_embeddings, name):
+    with pytest.raises(ValueError, match=SEED_ERROR):
+        Q.QUERIES[name](spark, empty_embeddings).toPandas()
 
 
 def test_cleaner_pool_jobs_carry_callers_job_group(spark, sf_dir, untagged_jobs):

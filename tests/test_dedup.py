@@ -109,16 +109,6 @@ def test_embedding_near_dup_exact_finds_planted_pair(spark):
     assert pairs[(0, 1000)] > 0.99
 
 
-def test_embedding_near_dup_bucketed_subset_of_exact(spark):
-    emb = _embeddings(spark)
-    exact = {(r.a_id, r.b_id) for r in DD.embedding_near_dup_pairs(emb, threshold=0.5).collect()}
-    approx = {(r.a_id, r.b_id)
-              for r in DD.embedding_near_dup_pairs_bucketed(emb, dim=8, threshold=0.5).collect()}
-    assert approx <= exact
-    # highly-similar planted pair lands in the same bucket
-    assert (0, 1000) in approx
-
-
 def test_embedding_near_dup_blocked_matches_exact(spark):
     # the distributed block-GEMM path must reproduce the exact all-pairs
     # result (same pairs, same similarities) — it is the declared path

@@ -7,6 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from overpaint_spark.operators import quantization as QZ
+from overpaint_spark.operators.similarity import id_prefix
 
 SF = "/root/testdata/sf0.001"
 
@@ -76,8 +77,8 @@ def test_pq_codes_pick_nearest_subspace_entry(spark):
         R(vec_id=3, embedding=[4.8, 5.1, 9.0, 9.5]),   # near vec1 sub0, vec0 sub1
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r.vec_id: r.codes for r in
-           QZ.pq_encode(df, dim=4, n_subspaces=2, n_codes=2).collect()}
+    cb = QZ.pq_codebooks(id_prefix(df, 2)[1], n_subspaces=2, n_codes=2)
+    out = {r.vec_id: r.codes for r in QZ.pq_encode(df, cb).collect()}
     assert out[0] == [0, 0] and out[1] == [1, 1]
     assert out[2] == [0, 1] and out[3] == [1, 0]
 
@@ -86,7 +87,7 @@ def test_pq_codes_in_range_on_fixture(spark):
     from overpaint_spark.operators import quantization as QZ
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    out = QZ.pq_encode(e, dim=64, n_subspaces=8, n_codes=16)
+    out = QZ.pq_encode(e, QZ.pq_codebooks(id_prefix(e, 16)[1], 8, 16))
     rows = out.collect()
     assert len(rows) == e.count()
     for r in rows:
@@ -117,10 +118,9 @@ def test_pq_adc_distance_tracks_true_distance(spark):
         d[qi] = np.inf
         true_top[int(ids[qi])] = {int(ids[j]) for j in np.lexsort((ids, d))[:5]}
 
-    q = e.filter("vec_id < 10")
-    adc_all = QZ.pq_adc_topk(
-        e, q, dim=64, n_subspaces=8, n_codes=16, k=len(rows)
-    ).collect()
+    q_rows = e.filter("vec_id < 10").select("vec_id", "embedding").collect()
+    cb = QZ.pq_codebooks(id_prefix(e, 16)[1], n_subspaces=8, n_codes=16)
+    adc_all = QZ.pq_adc_topk(e, q_rows, cb, k=len(rows)).collect()
     by_q = {}
     for r in adc_all:
         by_q.setdefault(r.query_id, {})[r.neighbor_id] = r.adc_dist
@@ -145,12 +145,15 @@ def test_ivfpq_subset_of_full_adc_with_same_distances(spark):
     from overpaint_spark.operators import quantization as QZ
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.filter("vec_id < 10")
+    q_rows = e.filter("vec_id < 10").select("vec_id", "embedding").collect()
+    seed = id_prefix(e, 16)
     full = {
         (r.query_id, r.neighbor_id): r.adc_dist
-        for r in QZ.pq_adc_topk(e, q, dim=64, k=10**9).collect()
+        for r in QZ.pq_adc_topk(
+            e, q_rows, QZ.pq_codebooks(seed[1]), k=10**9
+        ).collect()
     }
-    ivfpq = QZ.ivf_pq_topk(e, q, dim=64, k=5).collect()
+    ivfpq = QZ.ivf_pq_topk(e, seed, q_rows, k=5).collect()
     assert len(ivfpq) > 0
     for r in ivfpq:
         assert full[(r.query_id, r.neighbor_id)] == r.adc_dist
@@ -192,8 +195,9 @@ def test_pq_training_reduces_quantization_error(spark):
             err += d2.min(axis=1).sum()
         return err / len(x)
 
-    seeded = mse(QZ.pq_codebooks(e, dim=64))
-    trained = mse(QZ.pq_codebooks(e, dim=64, train_iters=3))
+    _, sample = id_prefix(e, 4096)
+    seeded = mse(QZ.pq_codebooks(sample))
+    trained = mse(QZ.pq_codebooks(sample, train_iters=3))
     assert trained < 0.85 * seeded, (seeded, trained)
 
 
@@ -232,7 +236,8 @@ def test_ivfpq_residual_recall_and_exact_distances(spark):
 
     dim, C, M, K, n_probe, k = 16, 8, 4, 8, 2, 5
     df, planted = _clustered_embeddings(spark, dim=dim)
-    q = df.filter("vec_id < 10")
+    q_rows = df.filter("vec_id < 10").select("vec_id", "embedding").collect()
+    seed = id_prefix(df, max(C, K))
 
     def recall(res_rows):
         by_q = {}
@@ -240,9 +245,9 @@ def test_ivfpq_residual_recall_and_exact_distances(spark):
             by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
         return sum(planted[qi] in by_q.get(qi, set()) for qi in planted)
 
-    raw = QZ.ivf_pq_topk(df, q, dim=dim, n_centroids=C, n_probe=n_probe,
+    raw = QZ.ivf_pq_topk(df, seed, q_rows, n_centroids=C, n_probe=n_probe,
                          n_subspaces=M, n_codes=K, k=k).collect()
-    res = QZ.ivf_pq_topk(df, q, dim=dim, n_centroids=C, n_probe=n_probe,
+    res = QZ.ivf_pq_topk(df, seed, q_rows, n_centroids=C, n_probe=n_probe,
                          n_subspaces=M, n_codes=K, k=k,
                          by_residual=True).collect()
     r_raw, r_res = recall(raw), recall(res)
@@ -303,20 +308,6 @@ def test_dimension_stats_chunked_path_matches_flat(spark, monkeypatch):
     assert chunked.mins == flat.mins and chunked.maxs == flat.maxs
     assert np.allclose(chunked.mins, x.min(axis=0), atol=0)
     assert np.allclose(chunked.maxs, x.max(axis=0), atol=0)
-
-
-def test_pq_encode_accepts_precomputed_codebook(spark):
-    """The ADC/IVF-PQ searches pass their codebook through pq_encode;
-    the pass-through must produce codes identical to the self-computed
-    path (and spares two collect jobs per search)."""
-    from overpaint_spark.operators import quantization as QZ
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cb = QZ.pq_codebooks(e, dim=64)
-    a = {r.vec_id: r.codes for r in QZ.pq_encode(e, dim=64).collect()}
-    b = {r.vec_id: r.codes
-         for r in QZ.pq_encode(e, dim=64, codebook=cb).collect()}
-    assert a == b
 
 
 def test_dimension_stats_degenerate_inputs_paths_agree(spark, monkeypatch):
@@ -389,18 +380,18 @@ def test_opq_beats_plain_pq_on_correlated_data(spark):
     re-seeded them every round and voided it)."""
     dim, n = 64, 600
     df, Xf = _opq_fixture(spark)
+    _, sample = id_prefix(df, 4096)
 
-    cb_p = QZ.pq_codebooks(df, dim)
-    codes_p = {
-        r.vec_id: r.codes for r in QZ.pq_encode(df, dim, codebook=cb_p).collect()
-    }
+    cb_p = QZ.pq_codebooks(sample)
+    codes_p = {r.vec_id: r.codes for r in QZ.pq_encode(df, cb_p).collect()}
     mse_p = ((Xf - _recon(codes_p, cb_p, n, dim)) ** 2).mean()
 
     mses = {}
     for it in (1, 2, 3, 4, 5):
-        R, cb_o = QZ.opq_train(df, dim, n_iter=it)
+        R, cb_o = QZ.opq_train(sample, n_iter=it)
         codes_o = {
-            r.vec_id: r.codes for r in QZ.opq_encode(df, R, cb_o).collect()
+            r.vec_id: r.codes
+            for r in QZ.pq_encode(df, cb_o, rotation=R).collect()
         }
         mses[it] = (((Xf @ R) - _recon(codes_o, cb_o, n, dim)) ** 2).mean()
     assert mses[5] <= 0.8 * mse_p, (mses, mse_p)
@@ -410,13 +401,13 @@ def test_opq_beats_plain_pq_on_correlated_data(spark):
 
 def test_opq_rotation_is_orthogonal_and_deterministic(spark):
     """R must be orthogonal (distances in the rotated space ARE the
-    original distances — what makes opq_adc_topk search the original
+    original distances — what makes the rotated pq_adc_topk search the original
     space) and training bit-reproducible on re-runs."""
     import numpy as np
 
     df, _ = _opq_fixture(spark)
-    R1, cb1 = QZ.opq_train(df, 64, n_iter=3)
-    R2, cb2 = QZ.opq_train(df, 64, n_iter=3)
+    R1, cb1 = QZ.opq_train(id_prefix(df, 4096)[1], n_iter=3)
+    R2, cb2 = QZ.opq_train(id_prefix(df, 4096)[1], n_iter=3)
     assert np.array_equal(R1, R2) and np.array_equal(cb1, cb2)
     assert np.allclose(R1 @ R1.T, np.eye(64), atol=1e-10)
 
@@ -434,10 +425,13 @@ def test_opq_adc_topk_ranks_and_recall(spark):
         (r.query_id, r.neighbor_id)
         for r in SIM.brute_force_topk(df, q, k=5).collect()
     }
-    opq = QZ.opq_adc_topk(df, q, dim=64, k=5).collect()
+    q_rows = q.select("vec_id", "embedding").collect()
+    _, sample = id_prefix(df, 4096)
+    R, cb_o = QZ.opq_train(sample)
+    opq = QZ.pq_adc_topk(df, q_rows, cb_o, k=5, rotation=R).collect()
     pq = {
         (r.query_id, r.neighbor_id)
-        for r in QZ.pq_adc_topk(df, q, dim=64, k=5).collect()
+        for r in QZ.pq_adc_topk(df, q_rows, QZ.pq_codebooks(sample), k=5).collect()
     }
     got = {(r.query_id, r.neighbor_id) for r in opq}
     assert all(qid != nid for qid, nid in got)

@@ -77,10 +77,11 @@ def test_ivf_topk_recall_and_exact_sims(spark):
 
     e = load_table(spark, f"{SF}/embeddings.parquet")
     q = e.filter("vec_id < 10")
+    _, cmat = SIM.id_prefix(e, 16)
     exact = {(r.query_id, r.neighbor_id): r.cosine_sim
              for r in SIM.brute_force_topk(e, q, k=5).collect()}
     ivf = {(r.query_id, r.neighbor_id): r.cosine_sim
-           for r in SIM.ivf_topk(e, q, k=5).collect()}
+           for r in SIM.ivf_topk(e, q, cmat, k=5).collect()}
     # every returned similarity is the true cosine (IVF prunes, never distorts)
     for key, sim in ivf.items():
         if key in exact:
@@ -89,7 +90,7 @@ def test_ivf_topk_recall_and_exact_sims(spark):
     assert recall >= 0.3, f"recall {recall}"
     # per-query ranks are 1..k without gaps
     ranks = {}
-    for r in SIM.ivf_topk(e, q, k=5).collect():
+    for r in SIM.ivf_topk(e, q, cmat, k=5).collect():
         ranks.setdefault(r.query_id, []).append(r.rank)
     for qid, rs in ranks.items():
         assert sorted(rs) == list(range(1, len(rs) + 1))
@@ -105,12 +106,17 @@ def test_ivf_trained_centroids_recall(spark):
     q = e.filter("vec_id < 10")
     exact = {(r.query_id, r.neighbor_id)
              for r in SIM.brute_force_topk(e, q, k=5).collect()}
+    _, init = SIM.id_prefix(e, 16)
     plain = {(r.query_id, r.neighbor_id)
-             for r in SIM.ivf_topk(e, q, k=5).collect()}
+             for r in SIM.ivf_topk(e, q, init, k=5).collect()}
     trained1 = {(r.query_id, r.neighbor_id)
-                for r in SIM.ivf_topk(e, q, k=5, train_iters=3).collect()}
+                for r in SIM.ivf_topk(
+                    e, q, SIM.train_kmeans_centroids(e, init, 3), k=5
+                ).collect()}
     trained2 = {(r.query_id, r.neighbor_id)
-                for r in SIM.ivf_topk(e, q, k=5, train_iters=3).collect()}
+                for r in SIM.ivf_topk(
+                    e, q, SIM.train_kmeans_centroids(e, init, 3), k=5
+                ).collect()}
     assert trained1 == trained2
     r_plain = len(exact & plain) / len(exact)
     r_trained = len(exact & trained1) / len(exact)
@@ -124,8 +130,8 @@ def test_kmeans_centroids_shape_and_determinism(spark):
     from overpaint_spark.sources.catalog import load_table
 
     e = load_table(spark, f"{SF}/embeddings.parquet")
-    c1 = SIM.train_kmeans_centroids(e, n_centroids=8, n_iter=2)
-    c2 = SIM.train_kmeans_centroids(e, n_centroids=8, n_iter=2)
+    c1 = SIM.train_kmeans_centroids(e, SIM.id_prefix(e, 8)[1], n_iter=2)
+    c2 = SIM.train_kmeans_centroids(e, SIM.id_prefix(e, 8)[1], n_iter=2)
     assert c1.shape == (8, len(e.select("embedding").first()[0]))
     assert np.array_equal(c1, c2)
 
@@ -211,7 +217,7 @@ def test_zero_norm_vector_never_wins(spark):
     assert all(99 not in (r.a_id, r.b_id) for r in pairs_blk.collect())
 
     # assignment paths must stay deterministic, not crash on NaN
-    cmat = SIM.seeded_centroids(e, 2)
+    _, cmat = SIM.id_prefix(e, 2)
     assigned = SIM.assign_to_centroids(e, cmat, 1).collect()
     assert len(assigned) == 4
 
@@ -251,7 +257,7 @@ def test_two_level_assignment_exhaustive_probe_equals_flat(spark):
     from overpaint_spark.sources.catalog import load_table
 
     e = load_table(spark, f"{SF}/embeddings.parquet")
-    cmat = SIM.seeded_centroids(e, 16)
+    _, cmat = SIM.id_prefix(e, 16)
     for n_assign in (1, 4):
         flat = {
             (r.vec_id, i): r.cluster_id
@@ -280,7 +286,7 @@ def test_two_level_assignment_partial_probe_agreement_floor(spark):
     from overpaint_spark.sources.catalog import load_table
 
     e = load_table(spark, f"{SF}/embeddings.parquet")
-    cmat = SIM.seeded_centroids(e, 16)
+    _, cmat = SIM.id_prefix(e, 16)
     flat = {r.vec_id: r.cluster_id
             for r in SIM.assign_to_centroids(e, cmat, 1).collect()}
     for p, floor in ((2, 0.7), (3, 0.85)):
@@ -301,7 +307,7 @@ def test_flat_assignment_dispatches_to_two_level_past_threshold(spark, monkeypat
     from overpaint_spark.sources.catalog import load_table
 
     e = load_table(spark, f"{SF}/embeddings.parquet").limit(64)
-    cmat = SIM.seeded_centroids(e, 16)
+    _, cmat = SIM.id_prefix(e, 16)
     monkeypatch.setattr(SIM, "_TWO_LEVEL_MIN_C", 16)
     via_dispatch = {r.vec_id: r.cluster_id
                     for r in SIM.assign_to_centroids(e, cmat, 1).collect()}
@@ -321,9 +327,10 @@ def test_kmeans_training_two_level_path_matches_flat(spark, monkeypatch):
     from overpaint_spark.sources.catalog import load_table
 
     e = load_table(spark, f"{SF}/embeddings.parquet").limit(200)
-    flat = SIM.train_kmeans_centroids(e, n_centroids=16, n_iter=2)
+    _, init = SIM.id_prefix(e, 16)
+    flat = SIM.train_kmeans_centroids(e, init, n_iter=2)
     monkeypatch.setattr(SIM, "_TWO_LEVEL_MIN_C", 16)
-    two = SIM.train_kmeans_centroids(e, n_centroids=16, n_iter=2)
+    two = SIM.train_kmeans_centroids(e, init, n_iter=2)
     assert np.array_equal(flat, two)
 
 

@@ -13,6 +13,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
@@ -72,7 +73,7 @@ def main() -> int:
     ap.add_argument("-q", "--query", action="append", default=None)
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from overpaint_spark.session import get_spark
 
