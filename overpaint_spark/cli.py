@@ -382,9 +382,12 @@ def main(argv: list[str] | None = None) -> int:
                 if args.anomaly:
                     from pyspark.sql import functions as F
 
-                    from overpaint_spark.rules.drift import metric_zscores
+                    from overpaint_spark.rules.drift import (
+                        metric_zscores,
+                        read_profile_history,
+                    )
 
-                    history = spark.read.parquet(args.snapshot_dir)
+                    history = read_profile_history(spark, args.snapshot_dir)
                     hits = (
                         metric_zscores(history)
                         .filter(

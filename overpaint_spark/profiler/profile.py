@@ -126,11 +126,13 @@ TOP_VALUES_MAX_DISTINCT = 50
 def _top_values_for(
     df: DataFrame, cols: list[str], k: int
 ) -> dict[str, list[tuple[str, int]]]:
-    """One job: top-``k`` (value, count) for the given string columns —
-    a stack projection into a distinct-values-sized shuffle + window
-    rank (same plan as the declared ``profile_top_values`` query)."""
-    from pyspark.sql.window import Window
-
+    """Top-``k`` (value, count) for the given string columns: one
+    collect of a stack projection into a distinct-values-sized
+    ``groupBy(cname, value).count()``, ranked on the driver by count
+    descending, then value ascending. The callers admit only columns
+    whose cardinality passed the ``TOP_VALUES_MAX_DISTINCT`` gate, so
+    the collected rows are bounded; a window rank plus a global sort
+    would cost three more jobs for the same answer."""
     # escape both the string literal and the identifier: column names
     # with quotes/backticks must not break (or inject into) the stack
     # expression — the same bq/lit discipline as profiler/incremental.py
@@ -139,20 +141,19 @@ def _top_values_for(
         for c in cols
     )
     pairs = df.selectExpr(f"stack({len(cols)}, {stack_args}) as (cname, value)")
-    w = Window.partitionBy("cname").orderBy(F.col("n").desc(), F.col("value"))
-    rows = (
+    counts: dict[str, list[tuple[str, int]]] = {}
+    for r in (
         pairs.filter(F.col("value").isNotNull())
         .groupBy("cname", "value")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .orderBy("cname", "rk")
+        .count()
         .collect()
-    )
-    out: dict[str, list[tuple[str, int]]] = {}
-    for r in rows:
-        out.setdefault(r["cname"], []).append((r["value"], int(r["n"])))
-    return out
+    ):
+        counts.setdefault(r["cname"], []).append((r["value"], int(r["count"])))
+    # Python orders str by code point, which is Spark's UTF-8 byte order
+    return {
+        c: sorted(vs, key=lambda vn: (-vn[1], vn[0]))[:k]
+        for c, vs in counts.items()
+    }
 
 
 def profile_table(
@@ -164,7 +165,7 @@ def profile_table(
 ) -> TableProfile:
     """Profile one table in a single aggregate job (plus a metadata read).
 
-    ``top_values_k > 0`` adds at most ONE extra job for the table: a
+    ``top_values_k > 0`` adds at most ONE extra collect for the table: a
     top-k histogram over the string columns whose cardinality (measured
     for free inside the main pass) is enum-ish (≤
     ``TOP_VALUES_MAX_DISTINCT``)."""

@@ -78,9 +78,16 @@ def write_profile_snapshot(
     return df
 
 
+def read_profile_history(spark: SparkSession, path: str) -> DataFrame:
+    """Every run's snapshot rows, read through ``SNAPSHOT_SCHEMA``: a
+    run id stays the string it was written as (Spark would infer
+    ``001`` as the integer 1), and no schema-inference job runs."""
+    return spark.read.schema(SNAPSHOT_SCHEMA).parquet(path)
+
+
 def read_profile_snapshot(spark: SparkSession, path: str, run_id: str) -> DataFrame:
     """One run's snapshot; the run_id filter prunes to one partition."""
-    return spark.read.parquet(path).filter(F.col("run_id") == run_id)
+    return read_profile_history(spark, path).filter(F.col("run_id") == run_id)
 
 
 def snapshot_drift(

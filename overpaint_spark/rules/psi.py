@@ -168,6 +168,14 @@ class HistogramSpec:
             ) from exc
 
 
+#: the persisted histogram rows; readers declare it so a numeric-looking
+#: run id is not inferred as an integer partition value
+HISTOGRAM_SNAPSHOT_SCHEMA = (
+    "run_id string, table_name string, column_name string, "
+    "n_bins int, bucket int, n long"
+)
+
+
 def write_histogram_snapshot(
     spark,
     tables: dict[str, DataFrame],
@@ -208,7 +216,7 @@ def psi_between_runs(
     """(table, column, psi, band) for every monitored distribution
     present in both runs — two partition-pruned reads of bucket counts,
     PSI folded driver-side."""
-    snap = spark.read.parquet(path).filter(
+    snap = spark.read.schema(HISTOGRAM_SNAPSHOT_SCHEMA).parquet(path).filter(
         F.col("run_id").isin([current_run, baseline_run])
     )
     rows = snap.collect()

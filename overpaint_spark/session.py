@@ -9,7 +9,10 @@ defaults here are chosen for the 100 TB posture:
   footers when possible — the profiler's hot path),
 - Arrow for any pandas interchange (similarity / multimodal UDFs),
 - shuffle partitions sized by env so local[32] tests and a 1000-executor
-  cluster use the same code path.
+  cluster use the same code path,
+- a generated-code cache sized to a monitor pass's working set, so a
+  scheduled re-run reuses its compiled classes instead of recompiling
+  them in Janino (and re-JITting them) on every pass.
 """
 
 from __future__ import annotations
@@ -17,6 +20,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in Spark's LRU cache of compiled generated classes (static
+# conf: read once per JVM). Counted with CodegenMetrics' compilation
+# counter, profiling needs about 11 classes per table and the rest of
+# a monitor pass (rules, declared query, snapshot writes, drift) about
+# 75: 112 for a 3-table lake. The access pattern is cyclic, so with
+# Spark's default of 100 every class is evicted before its next use
+# and each warm pass recompiles about 80 (DEPLOY.md). 2048 holds a
+# lake of more than 150 tables; ``extra_conf`` or ``spark-submit
+# --conf`` override it.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def _default_heap_gb() -> int:
@@ -81,6 +95,7 @@ def get_spark(app_name: str = "overpaint-spark", master: str | None = None,
             ),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

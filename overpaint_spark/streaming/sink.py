@@ -49,8 +49,11 @@ def idempotent_append(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
             f"batch output already has a {BATCH_COL!r} column — the "
             "idempotent sink reserves it for the micro-batch id"
         )
+    # a string literal reaches the generated code by reference, while an
+    # integer one is inlined into it and every new batch id would compile
+    # new classes; the ``_batch_id=N`` directory name is the same for both
     (
-        batch_df.withColumn(BATCH_COL, F.lit(int(batch_id)))
+        batch_df.withColumn(BATCH_COL, F.lit(str(batch_id)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BATCH_COL)

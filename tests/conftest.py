@@ -35,3 +35,21 @@ def untagged_jobs(spark):
         return sorted(set(status.getJobIdsForGroup(None)) - before)
 
     return run
+
+
+@pytest.fixture
+def compiled_classes(spark):
+    """Runs ``fn`` and returns how many generated classes Spark compiled
+    meanwhile: the misses of its codegen cache, counted by the samples
+    of CodegenMetrics' compilation-time histogram."""
+    metric = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def run(fn) -> int:
+        before = metric.getCount()
+        fn()
+        return metric.getCount() - before
+
+    return run

@@ -1,5 +1,8 @@
 """Profile snapshot persistence + drift detection."""
 
+import pytest
+
+from overpaint_spark.profiler.profile import TableProfile
 from overpaint_spark.rules.drift import (
     read_profile_snapshot,
     snapshot_drift,
@@ -31,6 +34,35 @@ def test_snapshot_roundtrip_and_drift(spark, tmp_path):
     # column_count is stable across scale factors → no alert
     cc = by_key[("lineitem", None, "column_count")]
     assert not cc.drift_alert and cc.pct_change == 0.0
+
+
+@pytest.mark.parametrize("older,newer", [("001", "002"), ("20260101", "20260102")])
+def test_numeric_looking_run_ids_stay_strings(spark, tmp_path, older, newer):
+    """Run ids are strings however they look: the snapshot readers
+    declare their schema, so Spark never infers ``001`` as the integer
+    partition value 1 (which lost the leading zeros and made the PSI
+    fold miss its string-keyed runs)."""
+    from overpaint_spark.rules.psi import (
+        HistogramSpec,
+        psi_between_runs,
+        write_histogram_snapshot,
+    )
+
+    snap, hist = str(tmp_path / "snap"), str(tmp_path / "hist")
+    t = spark.createDataFrame([(float(i),) for i in range(10)], "x double")
+    for run, rows in ((older, 4), (newer, 6)):
+        write_profile_snapshot(
+            spark, "", snap, run,
+            profiles=[TableProfile(schema="public", name="t", estimated_rows=rows)],
+        )
+        write_histogram_snapshot(
+            spark, {"t": t}, hist, run, [HistogramSpec("t", "x", 0.0, 10.0, 5)]
+        )
+    s = read_profile_snapshot(spark, snap, older)
+    assert dict(s.dtypes)["run_id"] == "string"
+    got = {(r.run_id, r.metric, r.value_num) for r in s.collect()}
+    assert got == {(older, "estimated_rows", 4.0), (older, "column_count", 0.0)}
+    assert psi_between_runs(spark, hist, newer, older) == [("t", "x", 0.0, "stable")]
 
 
 def test_drift_presence_change_alerts(spark):

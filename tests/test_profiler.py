@@ -150,6 +150,31 @@ def test_top_values_enum_columns_only(spark):
         assert truth[v] == n
 
 
+def test_top_values_tie_break_and_cut(spark):
+    """Equal counts rank by value ascending, each list stops at k, and
+    the histogram costs one collect: at most two jobs (the shuffle map
+    stage and the result under AQE), not a window rank plus a sort."""
+    from overpaint_spark.profiler.profile import _top_values_for
+
+    df = spark.createDataFrame(
+        [("b", "x"), ("a", "z"), ("c", "x"), ("b", "z"), ("a", "y"),
+         ("d", None), ("c", "\u00e9")],
+        "s string, t string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("top-values-jobs", "top-values-jobs", False)
+    try:
+        tops = _top_values_for(df, ["s", "t"], 3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert tops == {
+        "s": [("a", 2), ("b", 2), ("c", 2)],
+        "t": [("x", 2), ("z", 2), ("y", 1)],
+    }
+    assert _top_values_for(df, ["s"], 1) == {"s": [("a", 2)]}
+    assert len(sc.statusTracker().getJobIdsForGroup("top-values-jobs")) <= 2
+
+
 def test_top_values_render_cell():
     from overpaint_spark.functions.formatting import top_values_cell
 

@@ -11,6 +11,8 @@ same batch id (exactly what the engine does on restart) and pin zero
 duplicates.
 """
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -51,6 +53,24 @@ def test_replay_partial_rewrite_repairs_batch(spark, tmp_path):
     idempotent_append(full, 0, out)  # the replay
     got = sorted((r.id, r.v) for r in read_sink(spark, out).collect())
     assert got == [(1, "a"), (2, "b")]
+
+
+def test_next_batch_compiles_no_new_code(spark, tmp_path, compiled_classes):
+    """The batch id reaches the generated code as a string reference,
+    not an inlined integer, so a later micro-batch reuses the first
+    one's compiled classes; the layout stays one ``_batch_id=N``
+    directory per batch, read back as ``_batch_id long``."""
+    out = str(tmp_path / "sink")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    idempotent_append(df, 0, out)
+    assert compiled_classes(lambda: idempotent_append(df, 1, out)) == 0
+    assert compiled_classes(lambda: idempotent_append(df, 2, out)) == 0
+    dirs = sorted(d for d in os.listdir(out) if d.startswith(BATCH_COL))
+    assert dirs == [f"{BATCH_COL}=0", f"{BATCH_COL}=1", f"{BATCH_COL}=2"]
+    raw = spark.read.schema(f"id long, v string, {BATCH_COL} long").parquet(out)
+    assert sorted((r[BATCH_COL], r.id) for r in raw.collect()) == [
+        (b, i) for b in range(3) for i in (1, 2)
+    ]
 
 
 def test_reserved_column_rejected(spark, tmp_path):
