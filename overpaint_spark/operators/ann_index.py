@@ -8,19 +8,30 @@ production cadence — a 100 TB corpus is indexed ONCE (one assignment +
 encode pass) and searched many times, so the index must be a
 first-class stored artifact.
 
-Layout under ``<path>/``:
+Layout under ``<path>/``, each relation read with its declared schema
+(:func:`codes_schema`, :data:`CENTROIDS_SCHEMA`, :data:`CODEBOOK_SCHEMA`,
+:func:`tombstones_schema`) — never inferred, so opening the index runs
+no parquet footer job and an empty relation reads as zero rows:
 
-- ``codes``:     (id, codes array<int>, cluster_id) — the ONLY
+- ``codes``:     (id long, codes array<int>, cluster_id int) — the ONLY
                  data-sized relation; search reads code bytes, never
                  vectors. At production scale write it bucketed/
                  partitioned by cluster_id so a probe prunes to its
                  lists' files (partition pruning = FAISS's inverted
                  list seek).
+- ``codes_delta``: the same rows appended by the streaming ingest,
+                 partitioned by ``_batch_id`` (streaming/ann_ingest.py).
+- ``tombstones``: (id long) — deleted ids, excluded at load until
+                 :func:`compact_ann_index` folds them in.
 - ``centroids``: (cluster_id, centroid array<double>) — C rows.
 - ``codebook``:  (subspace, code, center array<double>) — M·K rows.
 - meta rides IN the bounded relations (dim = Σ subspace widths,
   C/M/K = row counts) rather than a sidecar file, so a stale-meta
   mismatch is impossible.
+
+The geometry (centroids + codebook) never changes after
+:func:`persist_ann_index`, so :func:`load_ann_geometry` collects it
+once per path and reuses it while its part files are unchanged.
 
 Search goes through the SAME ``quantization._ivfpq_search`` body as
 the live ``ivf_pq_topk`` — live and loaded indexes cannot diverge in
@@ -32,6 +43,7 @@ oracle-reproducible; centroids come seeded or k-means-trained
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,14 +54,32 @@ from pyspark.util import inheritable_thread_target
 from overpaint_spark.localrel import local_df
 
 
-def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read an OPTIONAL relation (None when never written) — but ONLY
-    path-not-found maps to None; a corrupt file, permission failure,
-    or any other read error propagates, because treating it as "not
-    there" would silently resurrect deleted rows (tombstones) or drop
-    streamed ingest (codes_delta)."""
+#: declared schema of the ``centroids`` relation
+CENTROIDS_SCHEMA = "cluster_id int, centroid array<double>"
+#: declared schema of the ``codebook`` relation
+CODEBOOK_SCHEMA = "subspace int, code int, center array<double>"
+
+
+def codes_schema(id_col: str) -> str:
+    """Declared schema of ``codes`` and ``codes_delta`` (the delta's
+    ``_batch_id`` partition column is discovered from its paths)."""
+    return f"{id_col} long, codes array<int>, cluster_id int"
+
+
+def tombstones_schema(id_col: str) -> str:
+    """Declared schema of ``tombstones``. Files that hold the id as
+    ``int`` (written before deletes cast it) widen to ``long`` on read."""
+    return f"{id_col} long"
+
+
+def _read_optional(spark: SparkSession, path: str, schema: str) -> DataFrame | None:
+    """Read an OPTIONAL relation with its declared ``schema`` (None when
+    never written) — but ONLY path-not-found maps to None; a corrupt
+    file, permission failure, or any other read error propagates,
+    because treating it as "not there" would silently resurrect deleted
+    rows (tombstones) or drop streamed ingest (codes_delta)."""
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as exc:
         cond = getattr(exc, "getCondition", lambda: None)() or ""
         if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(exc):
@@ -73,40 +103,55 @@ def _staged_generations(path: str, stage_name: str) -> list[str]:
     )
 
 
-def _read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
+def _union_existing(
+    spark: SparkSession, df: DataFrame | None, dirs: list[str], schema: str
+) -> DataFrame | None:
+    """``df`` ∪ every directory in ``dirs`` that exists, each read with
+    ``schema``; the ingest sink's ``_batch_id`` partition column is
+    dropped so every side shares one schema."""
+    from overpaint_spark.streaming.sink import BATCH_COL
+
+    for d in dirs:
+        part = _read_optional(spark, d, schema)
+        if part is not None:
+            part = part.drop(BATCH_COL)
+            df = part if df is None else df.unionByName(part)
+    return df
+
+
+def _read_tombstones(
+    spark: SparkSession, path: str, id_col: str = "vec_id"
+) -> DataFrame | None:
     """Tombstone ids, INCLUDING any generation a compaction has staged
     aside (``tombstones_compacting/``) — so the read view is unchanged
     while a compaction is in flight or after one crashed mid-fold."""
-    tomb = _read_optional(spark, f"{path}/tombstones")
-    for gen in _staged_generations(path, "tombstones_compacting"):
-        g = _read_optional(spark, gen)
-        if g is not None:
-            tomb = g if tomb is None else tomb.unionByName(g)
-    return tomb
+    return _union_existing(
+        spark,
+        None,
+        [f"{path}/tombstones", *_staged_generations(path, "tombstones_compacting")],
+        tombstones_schema(id_col),
+    )
 
 
-def _read_codes(spark: SparkSession, path: str) -> DataFrame:
+def _read_codes(
+    spark: SparkSession, path: str, id_col: str = "vec_id"
+) -> DataFrame:
     """The full coded corpus: the batch-built ``codes`` relation plus
     the streamed ``codes_delta`` relation (written batch-id-partitioned
-    by streaming/ann_ingest.py's exactly-once sink; the bookkeeping
-    partition column is dropped here so both sides share one schema).
-    Delta rows stay in their own directory because the base ``codes``
-    write is un-partitioned — mixing layouts in one directory breaks
-    partition discovery — and the union is free: both sides are parquet
-    scans of code rows, and compaction folds the delta in."""
-    from overpaint_spark.streaming.sink import BATCH_COL
-
-    codes = spark.read.parquet(f"{path}/codes")
-    delta = _read_optional(spark, f"{path}/codes_delta")
-    if delta is not None:
-        codes = codes.unionByName(delta.drop(BATCH_COL))
-    # generations a compaction staged aside (in-flight or crashed
-    # mid-fold): still part of the corpus until the codes swap lands
-    for gen in _staged_generations(path, "codes_delta_compacting"):
-        g = _read_optional(spark, gen)
-        if g is not None:
-            codes = codes.unionByName(g.drop(BATCH_COL))
-    return codes
+    by streaming/ann_ingest.py's exactly-once sink) plus the generations
+    a compaction staged aside (in-flight or crashed mid-fold: still part
+    of the corpus until the codes swap lands). Delta rows stay in their
+    own directory because the base ``codes`` write is un-partitioned —
+    mixing layouts in one directory breaks partition discovery — and
+    the union is free: every side is a parquet scan of code rows, and
+    compaction folds the delta in."""
+    schema = codes_schema(id_col)
+    return _union_existing(
+        spark,
+        spark.read.schema(schema).parquet(f"{path}/codes"),
+        [f"{path}/codes_delta", *_staged_generations(path, "codes_delta_compacting")],
+        schema,
+    )
 
 
 @dataclass
@@ -130,29 +175,23 @@ def build_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> AnnIndex:
-    """One assignment GEMM + one encode pass over the corpus; centroid/
-    codebook training is bounded. One id-ordered seed collect
+    """One pass over the corpus assigns and encodes every vector
+    (:func:`~overpaint_spark.operators.quantization.ivfpq_encode`);
+    centroid/codebook training is bounded. One id-ordered seed collect
     (:func:`~overpaint_spark.operators.similarity.id_prefix`) serves
     both the coarse centroids (its first ``n_centroids`` rows, or the
     k-means init when ``train_iters > 0``) and the PQ codebook (its
     first ``n_codes`` rows)."""
-    from overpaint_spark.operators.quantization import pq_codebooks, pq_encode
-    from overpaint_spark.operators.similarity import (
-        assign_to_centroids,
-        id_prefix,
-        train_kmeans_centroids,
-    )
+    from overpaint_spark.operators.quantization import ivfpq_encode, pq_codebooks
+    from overpaint_spark.operators.similarity import id_prefix, train_kmeans_centroids
 
     _, seed = id_prefix(vectors, max(n_centroids, n_codes), id_col, vec_col)
     coarse = seed[:n_centroids]
     if train_iters > 0:
         coarse = train_kmeans_centroids(vectors, coarse, train_iters, vec_col)
     cb = pq_codebooks(seed, n_subspaces, n_codes)
-    assigned = assign_to_centroids(
-        vectors, coarse, 1, id_col, vec_col, include_vec=False
-    )
-    codes = pq_encode(vectors, cb, id_col, vec_col)
-    return AnnIndex(coarse, cb, codes.join(assigned, id_col), dim, id_col)
+    codes = ivfpq_encode(vectors, coarse, cb, id_col, vec_col)
+    return AnnIndex(coarse, cb, codes, dim, id_col)
 
 
 def persist_ann_index(index: AnnIndex, path: str) -> None:
@@ -183,9 +222,9 @@ def persist_ann_index(index: AnnIndex, path: str) -> None:
         # default-parallelism local relation serializes 32 per-partition
         # ScalaReflection tolls into one task (~5 s per write on the
         # bench box; overpaint_spark/localrel.py)
-        local_df(
-            spark, cent_rows, "cluster_id int, centroid array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/centroids")
+        local_df(spark, cent_rows, CENTROIDS_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/centroids")
 
     def _write_codebook() -> None:
         cb_rows = [
@@ -193,9 +232,9 @@ def persist_ann_index(index: AnnIndex, path: str) -> None:
             for mi in range(len(index.codebook))
             for ki in range(index.codebook[mi].shape[0])
         ]
-        local_df(
-            spark, cb_rows, "subspace int, code int, center array<double>"
-        ).write.mode("overwrite").parquet(f"{path}/codebook")
+        local_df(spark, cb_rows, CODEBOOK_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/codebook")
 
     # the pool threads inherit this thread's job group and tags
     tagged = inheritable_thread_target(spark)
@@ -208,40 +247,100 @@ def persist_ann_index(index: AnnIndex, path: str) -> None:
             fut.result()
 
 
-def load_ann_index(
-    spark: SparkSession, path: str, id_col: str = "vec_id"
-) -> AnnIndex:
-    """Bounded relations (centroids, codebook) collect back to numpy;
-    the data-sized codes relation stays a lazy DataFrame. The two tiny
-    collects are independent jobs — run concurrently (guide §2.6)."""
+# Geometry collected by load_ann_geometry, by absolute index path:
+# (part-file identity, coarse, codebook). Bounded so a process that
+# opens many short-lived index copies keeps only the recent ones;
+# sinks and loads may open indexes from several threads, hence the lock.
+_GEOMETRY_CACHE: dict[str, tuple] = {}
+_GEOMETRY_CACHE_PATHS = 16
+_GEOMETRY_LOCK = threading.Lock()
+
+
+def _geometry_identity(path: str) -> tuple | None:
+    """(relation, name, length, mtime) of every file under ``centroids``
+    and ``codebook``, listed on the driver; None when either is not a
+    local directory (the geometry is then collected on every open).
+    A re-persist writes new part files, so it changes the identity."""
+    import os
+
+    ident = []
+    for rel in ("centroids", "codebook"):
+        d = os.path.join(path, rel)
+        if not os.path.isdir(d):
+            return None
+        with os.scandir(d) as entries:
+            for ent in entries:
+                st = ent.stat()
+                ident.append((rel, ent.name, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(ident))
+
+
+def load_ann_geometry(spark: SparkSession, path: str):
+    """``(coarse, codebook)`` of the stored index: the (C, dim) centroid
+    matrix and the (M, K, dsub) PQ codebooks, as READ-ONLY numpy arrays.
+
+    The two bounded relations are collected (two concurrent jobs, guide
+    §2.6) the first time a path is opened, and reused while the
+    identity of their part files (:func:`_geometry_identity`) is
+    unchanged: a serving loop that reloads the index every pass, and
+    every ingest sink started on it, collect nothing. The arrays are
+    shared between callers, hence read-only."""
+    import os
     from concurrent.futures import ThreadPoolExecutor
 
     import numpy as np
 
+    key = os.path.abspath(path)
+    ident = _geometry_identity(path)
+    with _GEOMETRY_LOCK:
+        hit = _GEOMETRY_CACHE.get(key)
+    if ident is not None and hit is not None and hit[0] == ident:
+        return hit[1], hit[2]
     tagged = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        cent_fut = pool.submit(
-            tagged(lambda: spark.read.parquet(f"{path}/centroids").collect())
-        )
-        cb_fut = pool.submit(
-            tagged(lambda: spark.read.parquet(f"{path}/codebook").collect())
-        )
+        cent_fut = pool.submit(tagged(
+            lambda: spark.read.schema(CENTROIDS_SCHEMA)
+            .parquet(f"{path}/centroids").collect()
+        ))
+        cb_fut = pool.submit(tagged(
+            lambda: spark.read.schema(CODEBOOK_SCHEMA)
+            .parquet(f"{path}/codebook").collect()
+        ))
         cent = sorted((r.cluster_id, r.centroid) for r in cent_fut.result())
         cbr = cb_fut.result()
     coarse = np.array([c for _, c in cent], dtype=np.float64)
     n_sub = max(r.subspace for r in cbr) + 1
     n_codes = max(r.code for r in cbr) + 1
-    dsub = len(cbr[0].center)
-    cb = np.empty((n_sub, n_codes, dsub), dtype=np.float64)
+    cb = np.empty((n_sub, n_codes, len(cbr[0].center)), dtype=np.float64)
     for r in cbr:
         cb[r.subspace][r.code] = r.center
-    indexed = _read_codes(spark, path)
-    tomb = _read_tombstones(spark, path)
+    coarse.setflags(write=False)
+    cb.setflags(write=False)
+    if ident is not None:
+        with _GEOMETRY_LOCK:
+            _GEOMETRY_CACHE.pop(key, None)
+            _GEOMETRY_CACHE[key] = (ident, coarse, cb)
+            while len(_GEOMETRY_CACHE) > _GEOMETRY_CACHE_PATHS:
+                del _GEOMETRY_CACHE[next(iter(_GEOMETRY_CACHE))]
+    return coarse, cb
+
+
+def load_ann_index(
+    spark: SparkSession, path: str, id_col: str = "vec_id"
+) -> AnnIndex:
+    """Geometry through :func:`load_ann_geometry` (two collects the
+    first time a path is opened, none after); the data-sized codes
+    relation stays a lazy DataFrame over declared schemas, with
+    un-compacted tombstones anti-joined in. A repeated load of an
+    unchanged index runs no Spark job."""
+    coarse, cb = load_ann_geometry(spark, path)
+    indexed = _read_codes(spark, path, id_col)
+    tomb = _read_tombstones(spark, path, id_col)
     if tomb is not None:
         # un-compacted tombstones: exclude at load so every reader sees
         # delete semantics regardless of compaction cadence
         indexed = indexed.join(F.broadcast(tomb), id_col, "left_anti")
-    return AnnIndex(coarse, cb, indexed, n_sub * dsub, id_col)
+    return AnnIndex(coarse, cb, indexed, cb.shape[0] * cb.shape[2], id_col)
 
 
 def encode_delta(
@@ -252,18 +351,16 @@ def encode_delta(
     """Encode NEW vectors against the FROZEN geometry into code rows
     ``(id, codes, cluster_id)`` — the shared body of the batch
     :func:`add_to_ann_index` and the streaming ingest sink
-    (streaming/ann_ingest.py), so the two ingest paths cannot diverge
-    by a single code byte. One assignment GEMM + one encode pass over
-    the new rows only."""
-    from overpaint_spark.operators.quantization import pq_encode
-    from overpaint_spark.operators.similarity import assign_to_centroids
+    (streaming/ann_ingest.py). Both run
+    :func:`~overpaint_spark.operators.quantization.ivfpq_encode`, the
+    build's encoder too, so no ingest path can diverge from a build by
+    a single code byte. One assign-and-encode pass over the new rows
+    only."""
+    from overpaint_spark.operators.quantization import ivfpq_encode
 
-    assigned = assign_to_centroids(
-        new_vectors, index.coarse, 1, index.id_col, vec_col,
-        include_vec=False,
+    return ivfpq_encode(
+        new_vectors, index.coarse, index.codebook, index.id_col, vec_col
     )
-    codes = pq_encode(new_vectors, index.codebook, index.id_col, vec_col)
-    return codes.join(assigned, index.id_col)
 
 
 def add_to_ann_index(
@@ -320,9 +417,10 @@ def delete_from_ann_index(
     exclusion (a broadcast anti-join against the bounded tombstone
     set), amortized away by :func:`compact_ann_index` when the set has
     grown. ``ids`` is a one-column DataFrame of ``index.id_col``
-    values; geometry (centroids/codebooks) is frozen and untouched —
-    deletion changes the CANDIDATE set only."""
-    tomb = ids.select(F.col(ids.columns[0]).alias(index.id_col))
+    values, stored as ``long`` whatever their type (the declared
+    :func:`tombstones_schema`); geometry (centroids/codebooks) is frozen
+    and untouched — deletion changes the CANDIDATE set only."""
+    tomb = ids.select(F.col(ids.columns[0]).cast("long").alias(index.id_col))
     if persist_path is not None:
         # repartition(1), not coalesce(1): the ids relation is usually a
         # driver-local list whose coalesce pays the serialized
@@ -340,7 +438,9 @@ def delete_from_ann_index(
     )
 
 
-def compact_ann_index(spark: SparkSession, path: str) -> None:
+def compact_ann_index(
+    spark: SparkSession, path: str, id_col: str = "vec_id"
+) -> None:
     """Fold the tombstone set AND the streamed ``codes_delta`` relation
     into the codes relation (one anti-join rewrite, re-laid-out by
     cluster like :func:`persist_ann_index`) and clear both — the
@@ -369,12 +469,15 @@ def compact_ann_index(spark: SparkSession, path: str) -> None:
     landed. Renames assume a local/POSIX filesystem (the same
     assumption the parquet `overwrite` staging itself makes on this
     deployment); an object-store deployment would swap via a manifest
-    pointer instead."""
+    pointer instead.
+
+    Every relation is read with its declared schema (``id_col`` names
+    the id column, as in :func:`load_ann_index`), so an empty staged
+    generation — a micro-batch that arrived with no rows — folds in as
+    zero rows instead of failing schema inference."""
     import os
     import shutil
     import uuid
-
-    from overpaint_spark.streaming.sink import BATCH_COL
 
     # crash recovery (ADVICE r11): a crash between move(codes →
     # codes_old) and move(codes_compacted → codes) leaves the store
@@ -425,17 +528,11 @@ def compact_ann_index(spark: SparkSession, path: str) -> None:
     if not delta_gens and not tomb_gens:
         return
 
-    kept = spark.read.parquet(f"{path}/codes")
-    for g in delta_gens:
-        d = _read_optional(spark, g)
-        if d is not None:
-            kept = kept.unionByName(d.drop(BATCH_COL))
-    tomb = None
-    for g in tomb_gens:
-        t = _read_optional(spark, g)
-        if t is not None:
-            tomb = t if tomb is None else tomb.unionByName(t)
-    id_col = [c for c in kept.columns if c not in ("codes", "cluster_id")][0]
+    schema = codes_schema(id_col)
+    kept = _union_existing(
+        spark, spark.read.schema(schema).parquet(f"{path}/codes"), delta_gens, schema
+    )
+    tomb = _union_existing(spark, None, tomb_gens, tombstones_schema(id_col))
     if tomb is not None:
         kept = kept.join(F.broadcast(tomb), id_col, "left_anti")
     (
@@ -495,13 +592,13 @@ def ann_index_stats(
 
     from overpaint_spark.operators.quantization import _adc_dist_expr, _pq_lut
 
-    idx = load_ann_index(spark, path, id_col=id_col)  # geometry only used
-    raw = _read_codes(spark, path)
-    tomb = _read_tombstones(spark, path)
-    n_sub = len(idx.codebook)
+    coarse, codebook = load_ann_geometry(spark, path)
+    raw = _read_codes(spark, path, id_col)
+    tomb = _read_tombstones(spark, path, id_col)
+    n_sub = len(codebook)
     lut_rows = [
-        (int(c), _pq_lut(np.asarray(idx.coarse[c], dtype=np.float64), idx.codebook))
-        for c in range(len(idx.coarse))
+        (int(c), _pq_lut(np.asarray(coarse[c], dtype=np.float64), codebook))
+        for c in range(len(coarse))
     ]
     lut_df = local_df(
         spark, lut_rows, "cluster_id int, lut array<array<double>>"

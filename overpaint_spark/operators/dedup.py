@@ -332,10 +332,18 @@ def persist_dedup_index(
     )
 
 
+#: declared schemas of the persisted dedup index's two relations
+DEDUP_HASHES_SCHEMA = "chash string"
+DEDUP_BANDS_SCHEMA = "band_idx int, band_hash string"
+
+
 def load_dedup_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
+    """The ``(hashes, bands)`` pair :func:`persist_dedup_index` wrote,
+    read with the schemas it writes — opening the index runs no Spark
+    job (an inferred read would run one footer job per relation)."""
     return (
-        spark.read.parquet(f"{path}/hashes"),
-        spark.read.parquet(f"{path}/bands"),
+        spark.read.schema(DEDUP_HASHES_SCHEMA).parquet(f"{path}/hashes"),
+        spark.read.schema(DEDUP_BANDS_SCHEMA).parquet(f"{path}/bands"),
     )
 
 

@@ -208,8 +208,6 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
-    n_subspaces, _, dsub = codebook.shape
-
     def fn(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -217,17 +215,72 @@ def pq_encode(
             x = np.array(list(pdf[vec_col]), dtype=np.float64)
             if rotation is not None:
                 x = x @ rotation
-            codes = np.empty((len(x), n_subspaces), dtype=np.int32)
-            for mi in range(n_subspaces):
-                sub = x[:, mi * dsub : (mi + 1) * dsub]
-                d2 = ((sub[:, None, :] - codebook[mi][None, :, :]) ** 2).sum(axis=2)
-                codes[:, mi] = np.argmin(d2, axis=1)  # first min = lowest code
+            codes = _pq_codes_batch(x, codebook)
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "codes": [list(map(int, c)) for c in codes]}
             )
 
     return vectors.select(id_col, vec_col).mapInPandas(
         fn, f"{id_col} long, codes array<int>"
+    )
+
+
+def _pq_codes_batch(x, codebook):
+    """(n, M) int32 PQ codes of one batch matrix: per subspace, the index
+    of the nearest (L2) codebook entry, ties toward the lower index —
+    the encode kernel of :func:`pq_encode` and :func:`ivfpq_encode`."""
+    import numpy as np
+
+    n_subspaces, _, dsub = codebook.shape
+    codes = np.empty((len(x), n_subspaces), dtype=np.int32)
+    for mi in range(n_subspaces):
+        sub = x[:, mi * dsub : (mi + 1) * dsub]
+        d2 = ((sub[:, None, :] - codebook[mi][None, :, :]) ** 2).sum(axis=2)
+        codes[:, mi] = np.argmin(d2, axis=1)  # first min = lowest code
+    return codes
+
+
+def ivfpq_encode(
+    vectors: DataFrame,
+    coarse,
+    codebook,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``(id, codes array<int>, cluster_id)`` — raw IVF-PQ coding of every
+    vector in ONE Arrow-batched pass: each batch matrix is built once and
+    fed to both the coarse assignment kernel
+    (:func:`~overpaint_spark.operators.similarity._assigner`, two-level
+    past its threshold) and the PQ kernel (:func:`_pq_codes_batch`), so
+    the rows need no join of an assignment pass with an encode pass.
+    The codes and cluster ids equal those of :func:`pq_encode` joined
+    with ``assign_to_centroids(..., 1)``: both run the same kernels.
+    This is the encoder of the live raw :func:`ivf_pq_topk`, of
+    ``ann_index.build_ann_index`` and of every ingest into a persisted
+    index."""
+    import numpy as np
+    import pandas as pd
+
+    from overpaint_spark.operators.similarity import _assigner
+
+    assign = _assigner(coarse, 1)
+
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            x = np.array(list(pdf[vec_col]), dtype=np.float64)
+            codes = _pq_codes_batch(x, codebook)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "codes": [list(map(int, c)) for c in codes],
+                    "cluster_id": assign(x)[:, 0].astype("int32"),
+                }
+            )
+
+    return vectors.select(id_col, vec_col).mapInPandas(
+        fn, f"{id_col} long, codes array<int>, cluster_id int"
     )
 
 
@@ -421,20 +474,24 @@ def ivf_pq_topk(
     residual codebook). Declared as ``ann_topk_ivfpq_residual`` and
     also property-tested (recall ≥ raw at equal n_probe on clustered
     data, distances consistent with an exact numpy re-derivation;
-    tests/test_quantization.py). One shuffle: the cluster_id equi-join
-    (query side broadcast); plus the final top-k window."""
+    tests/test_quantization.py). The raw path codes candidates in one
+    pass (:func:`ivfpq_encode`, shared with the persisted index); the
+    residual path joins its assignment with its encode, because its
+    codebook depends on the assignment. One shuffle: the cluster_id
+    equi-join (query side broadcast); plus the final top-k window."""
     from overpaint_spark.operators.similarity import assign_to_centroids, id_prefix
 
     spark = candidates.sparkSession
     ids, mat = seed
     coarse = mat[:n_centroids]
-    c_assigned = assign_to_centroids(
-        candidates, coarse, 1, id_col, vec_col, include_vec=False
-    )
     if by_residual:
+        # the residual codebook is seeded from residuals, which depend on
+        # the assignment, so assignment and encode stay two joined passes
+        c_assigned = assign_to_centroids(
+            candidates, coarse, 1, id_col, vec_col, include_vec=False
+        )
         # (id, cluster_id, residual vector): one broadcast join against
-        # the C-row centroid relation + a zip_with — no extra shuffle
-        # beyond the assignment join the raw path also pays at encode.
+        # the C-row centroid relation + a zip_with
         cent_df = local_df(
             spark,
             [(int(i), [float(x) for x in coarse[i]]) for i in range(len(coarse))],
@@ -466,11 +523,10 @@ def ivf_pq_topk(
             to_code.filter(F.col(id_col) > seed_max), n_codes, id_col, vec_col
         )
         cb = pq_codebooks(residuals, n_subspaces, n_codes)
+        indexed = pq_encode(to_code, cb, id_col, vec_col).join(c_assigned, id_col)
     else:
-        to_code = candidates
         cb = pq_codebooks(mat, n_subspaces, n_codes)
-    codes = pq_encode(to_code, cb, id_col, vec_col)
-    indexed = codes.join(c_assigned, id_col)
+        indexed = ivfpq_encode(candidates, coarse, cb, id_col, vec_col)
     return _ivfpq_search(
         spark, indexed, coarse, cb, q_rows, n_probe, k, id_col, by_residual
     )

@@ -220,12 +220,11 @@ def train_kmeans_centroids(
     lower centroid index and empty clusters keep their previous
     centroid.
 
-    Past ``_TWO_LEVEL_MIN_C`` centroids each iteration's assignment GEMM
-    switches to the shared two-level coarse→fine core
-    (:func:`_two_level_topk_batch`, ≈N·9√C flops instead of N·C) — the
-    same asymptote fix the search-time assignment dispatches to; the
-    per-iteration group rebuild is C·√C driver flops, amortized over
-    every batch."""
+    Each iteration assigns through the same per-batch kernel as
+    :func:`assign_to_centroids` (:func:`_assigner`), so past
+    ``_TWO_LEVEL_MIN_C`` centroids it switches to the two-level
+    coarse→fine core (≈N·9√C flops instead of N·C); the per-iteration
+    group rebuild is C·√C driver flops, amortized over every batch."""
     import numpy as np
     import pandas as pd
 
@@ -233,36 +232,12 @@ def train_kmeans_centroids(
     src = vectors.select(vec_col)
 
     for _ in range(n_iter):
-        cnorm = np.linalg.norm(cmat, axis=1)
-        two_level = len(cmat) >= _TWO_LEVEL_MIN_C
-        if two_level:
-            G = max(1, int(np.ceil(np.sqrt(len(cmat)))))
-            reps, rnorm, members = _centroid_groups(cmat, G)
-            frozen = cmat, cnorm, reps, rnorm, members, min(8, G)
-        else:
-            frozen = cmat, cnorm, None, None, None, 0
-
-        def partials(batches, _c=frozen, _two=two_level):
-            mat_c, norm_c, reps_c, rnorm_c, members_c, p_c = _c
+        def partials(batches, _assign=_assigner(cmat, 1)):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                vnorm = np.linalg.norm(mat, axis=1)
-                if _two:
-                    assign = _two_level_topk_batch(
-                        mat, vnorm, mat_c, norm_c,
-                        reps_c, rnorm_c, members_c, p_c, 1,
-                    )[:, 0]
-                else:
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        sims = (mat @ mat_c.T) / (
-                            vnorm[:, None] * norm_c[None, :]
-                        )
-                    # zero-norm rows: NaN sims would make argmax
-                    # undefined; -1 pins them to centroid 0
-                    np.nan_to_num(sims, nan=-1.0, copy=False)
-                    assign = np.argmax(sims, axis=1)  # first max = lowest index
+                assign = _assign(mat)[:, 0]
                 rows = []
                 for cl in np.unique(assign):
                     sel = mat[assign == cl]
@@ -333,36 +308,39 @@ def id_prefix(
 _TWO_LEVEL_MIN_C = 4096
 
 
-def assign_to_centroids(
-    df: DataFrame,
-    cmat,
-    n_assign: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    include_vec: bool = True,
-) -> DataFrame:
-    """Arrow-batched nearest-centroid assignment: one GEMM per batch
-    against the small (broadcast-by-closure) centroid matrix; emits each
-    vector's top ``n_assign`` centroid ids as ``cluster_id`` rows.
-    Ties break toward the lower centroid index (stable argsort). This is
-    the 100 TB path — every vector is scored against C centroids, never
-    against other vectors. Past ``_TWO_LEVEL_MIN_C`` centroids the call
-    dispatches to :func:`assign_to_centroids_two_level` (N·~2√C flops
-    instead of N·C).
+def _assigner(cmat, n_assign: int = 1):
+    """The per-batch nearest-centroid kernel behind every assignment
+    pass: a function of an (n, dim) float64 matrix returning its (n,
+    n_assign) int64 centroid ids, ties toward the lower centroid index.
+    Flat cosine GEMM below ``_TWO_LEVEL_MIN_C`` centroids,
+    :func:`_two_level_assigner` at or above it. Built once per
+    centroid matrix on the driver; rides in the task closure."""
+    import numpy as np
 
-    ``include_vec=False`` (r12) drops the vector column from the OUTPUT
-    for callers that immediately ``.select(id, cluster_id)``: a
-    ``mapInPandas`` body is opaque to column pruning (guide §4.1), so
-    the old form re-built every embedding as a Python float list and
-    shipped it back through Arrow only for Spark to discard it."""
     if cmat.shape[0] >= _TWO_LEVEL_MIN_C:
-        return assign_to_centroids_two_level(
-            df, cmat, n_assign, id_col, vec_col, include_vec=include_vec
-        )
+        return _two_level_assigner(cmat, n_assign)
+    cnorm = np.linalg.norm(cmat, axis=1)
+
+    def assign(mat):
+        with np.errstate(invalid="ignore", divide="ignore"):
+            sims = (mat @ cmat.T) / (np.linalg.norm(mat, axis=1)[:, None] * cnorm[None, :])
+        np.nan_to_num(sims, nan=-1.0, copy=False)  # zero-norm rows
+        if n_assign == 1:
+            return np.argmax(sims, axis=1)[:, None]  # first max = lowest index
+        # stable top-n_assign centroid ids per row
+        return np.argsort(-sims, kind="stable", axis=1)[:, :n_assign]
+
+    return assign
+
+
+def _assign_rows(
+    df: DataFrame, assign, n_assign: int, id_col: str, vec_col: str, include_vec: bool
+) -> DataFrame:
+    """``(id[, vec], cluster_id)`` rows, ``n_assign`` per vector, from
+    one ``mapInPandas`` over the per-batch kernel ``assign``."""
     import numpy as np
     import pandas as pd
 
-    cnorm = np.linalg.norm(cmat, axis=1)
     vec_field = f"{vec_col} array<double>, " if include_vec else ""
     out_schema = f"{id_col} long, {vec_field}cluster_id int"
 
@@ -371,11 +349,7 @@ def assign_to_centroids(
             if len(pdf) == 0:
                 continue
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sims = (mat @ cmat.T) / (np.linalg.norm(mat, axis=1)[:, None] * cnorm[None, :])
-            np.nan_to_num(sims, nan=-1.0, copy=False)  # zero-norm rows
-            # stable top-n_assign centroid ids per row
-            top = np.argsort(-sims, kind="stable", axis=1)[:, :n_assign]
+            top = assign(mat)
             cols = {id_col: pdf[id_col].to_numpy().repeat(n_assign)}
             if include_vec:
                 cols[vec_col] = [
@@ -387,6 +361,34 @@ def assign_to_centroids(
             yield pd.DataFrame(cols)
 
     return df.select(id_col, vec_col).mapInPandas(fn, out_schema)
+
+
+def assign_to_centroids(
+    df: DataFrame,
+    cmat,
+    n_assign: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    include_vec: bool = True,
+) -> DataFrame:
+    """Arrow-batched nearest-centroid assignment: one GEMM per batch
+    against the small (broadcast-by-closure) centroid matrix; emits each
+    vector's top ``n_assign`` centroid ids as ``cluster_id`` rows.
+    Ties break toward the lower centroid index. This is the 100 TB
+    path — every vector is scored against C centroids, never against
+    other vectors. Past ``_TWO_LEVEL_MIN_C`` centroids the kernel
+    (:func:`_assigner`) is the two-level one of
+    :func:`assign_to_centroids_two_level` (N·~2√C flops instead of
+    N·C).
+
+    ``include_vec=False`` (r12) drops the vector column from the OUTPUT
+    for callers that immediately ``.select(id, cluster_id)``: a
+    ``mapInPandas`` body is opaque to column pruning (guide §4.1), so
+    the old form re-built every embedding as a Python float list and
+    shipped it back through Arrow only for Spark to discard it."""
+    return _assign_rows(
+        df, _assigner(cmat, n_assign), n_assign, id_col, vec_col, include_vec
+    )
 
 
 def _centroid_groups(cmat, n_groups: int):
@@ -416,8 +418,9 @@ def _two_level_topk_batch(
 ):
     """Numpy core of the coarse→fine assignment for ONE Arrow batch:
     (n, n_assign) int64 centroid ids, ties toward the lower index —
-    shared by :func:`assign_to_centroids_two_level` and the k-means
-    training loop so the two can never drift apart. Rows whose probed
+    run through :func:`_two_level_assigner` by every two-level
+    assignment (direct, dispatched, k-means training, the IVF-PQ
+    encoder) so they can never drift apart. Rows whose probed
     groups held fewer than n_assign centroids keep -1 in the unfilled
     slots."""
     import numpy as np
@@ -498,8 +501,22 @@ def assign_to_centroids_two_level(
     probe instead of silently under-probing. An EXPLICIT coarse_probe
     is respected as given (the partial-probe agreement tests rely on
     it); -1 fill is then possible and flagged."""
+    return _assign_rows(
+        df,
+        _two_level_assigner(cmat, n_assign, coarse_probe),
+        n_assign,
+        id_col,
+        vec_col,
+        include_vec,
+    )
+
+
+def _two_level_assigner(cmat, n_assign: int = 1, coarse_probe: int | None = None):
+    """The per-batch kernel of :func:`assign_to_centroids_two_level`
+    (probe default and semantics documented there): the centroid
+    grouping runs once here, each batch pays only
+    :func:`_two_level_topk_batch`."""
     import numpy as np
-    import pandas as pd
 
     C = cmat.shape[0]
     G = max(1, int(np.ceil(np.sqrt(C))))
@@ -517,29 +534,14 @@ def assign_to_centroids_two_level(
         p = max(8, need)
     p = min(p, G)
     cnorm = np.linalg.norm(cmat, axis=1)
-    vec_field = f"{vec_col} array<double>, " if include_vec else ""
-    out_schema = f"{id_col} long, {vec_field}cluster_id int"
 
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            vnorm = np.linalg.norm(mat, axis=1)
-            best_c = _two_level_topk_batch(
-                mat, vnorm, cmat, cnorm, reps, rnorm, members, p, n_assign
-            )
-            cols = {id_col: pdf[id_col].to_numpy().repeat(n_assign)}
-            if include_vec:
-                cols[vec_col] = [
-                    list(map(float, v))
-                    for v in pdf[vec_col]
-                    for _ in range(n_assign)
-                ]
-            cols["cluster_id"] = best_c.ravel().astype("int32")
-            yield pd.DataFrame(cols)
+    def assign(mat):
+        return _two_level_topk_batch(
+            mat, np.linalg.norm(mat, axis=1), cmat, cnorm,
+            reps, rnorm, members, p, n_assign,
+        )
 
-    return df.select(id_col, vec_col).mapInPandas(fn, out_schema)
+    return assign
 
 
 _SIG_WORD_BITS = 32

@@ -7,9 +7,11 @@ arrive as one batch, it TRICKLES, and the index must grow with it
 without ever retraining or rebuilding.
 
 Each micro-batch of arriving vectors is encoded against the FROZEN
-geometry (coarse centroids + PQ codebooks loaded once at sink
-construction) and its code rows written to the stored index's
-``codes_delta`` relation. Raw coding (``by_residual=false``) makes
+geometry (coarse centroids + PQ codebooks, opened once at sink
+construction through ``load_ann_geometry``, which collects them only
+if their files changed since the index was last opened in this
+process) in one assign-and-encode pass, and its code rows written to
+the stored index's ``codes_delta`` relation. Raw coding (``by_residual=false``) makes
 per-vector encode independent of every other vector, so the grown
 index is BIT-IDENTICAL to a one-shot build over the union REGARDLESS
 of how the stream is chopped into batches — batch boundaries cannot
@@ -31,8 +33,8 @@ maintenance cadence ``ann_index_stats`` signals.
 
 At 100 TB cadence this sink is the daily-ingest path the
 ``add_to_ann_index`` docstring promises: each micro-batch pays one
-assignment GEMM + one encode pass over ITS OWN rows only — the stored
-corpus is never re-read, never re-encoded.
+assign-and-encode pass over ITS OWN rows only — the stored corpus is
+never re-read, never re-encoded.
 """
 
 from __future__ import annotations
@@ -54,23 +56,22 @@ def write_ann_ingest_stream(
     to the persisted index's ``codes_delta`` relation at ``index_path``.
 
     The index geometry (centroids/codebook — the bounded relations) is
-    loaded ONCE here and frozen into the closure; per batch only the
-    data-sized encode of the batch's own rows runs. ``stream`` must
-    carry ``id_col`` and ``vec_col``; extra columns are ignored by the
-    encoder. Empty batches are skipped without touching the index."""
-    from overpaint_spark.operators.ann_index import encode_delta, load_ann_index
+    opened ONCE here through ``load_ann_geometry`` and frozen into the
+    closure; no codes relation is opened. Per batch only the encode of
+    the batch's own rows runs: one job, the write. ``stream`` must carry
+    ``id_col`` and ``vec_col``; extra columns are ignored by the
+    encoder. An empty batch writes no rows: every reader of
+    ``codes_delta`` declares its schema, so an empty directory reads as
+    zero rows."""
+    from overpaint_spark.operators.ann_index import load_ann_geometry
+    from overpaint_spark.operators.quantization import ivfpq_encode
 
-    spark = stream.sparkSession
-    frozen = load_ann_index(spark, index_path, id_col=id_col)
+    coarse, codebook = load_ann_geometry(stream.sparkSession, index_path)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         # the stream's contract is the STORED artifact: readers reload
         # via load_ann_index, which unions codes ∪ codes_delta
-        delta = encode_delta(
-            frozen, batch_df.select(id_col, vec_col), vec_col=vec_col
-        )
+        delta = ivfpq_encode(batch_df, coarse, codebook, id_col, vec_col)
         idempotent_append(delta, batch_id, f"{index_path}/codes_delta")
 
     writer = stream.writeStream.foreachBatch(apply).option(

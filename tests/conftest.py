@@ -1,3 +1,5 @@
+import itertools
+
 import pytest
 
 from overpaint_spark.session import get_spark
@@ -51,5 +53,35 @@ def compiled_classes(spark):
         before = metric.getCount()
         fn()
         return metric.getCount() - before
+
+    return run
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_by_stage(spark):
+    """Runs ``fn`` under a fresh job group and returns ``{job id: [stage
+    names]}`` for the Spark jobs it ran in that group, read through
+    ``statusTracker`` once the listener bus has delivered their events.
+    A schema-inference job shows as a ``parquet at ...`` stage."""
+    sc = spark.sparkContext
+    status = sc.statusTracker()
+
+    def run(fn) -> dict[int, list[str]]:
+        group = f"jobs-by-stage-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group, False)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out = {}
+        for job in sorted(status.getJobIdsForGroup(group)):
+            info = status.getJobInfo(job)
+            stages = [status.getStageInfo(s) for s in (info.stageIds if info else [])]
+            out[job] = [st.name for st in stages if st is not None]
+        return out
 
     return run

@@ -515,3 +515,263 @@ def test_compaction_recovers_interrupted_swap(spark, tmp_path):
     assert (
         spark.read.parquet(f"{path}/codes").count() == n_all - n_dead + 1
     )
+
+
+def _grown_store(spark, path):
+    """A persisted index with all three mutable-side relations: the
+    base ``codes``, a streamed ``codes_delta`` batch and ``tombstones``
+    — built from in-memory handles, so no load has opened ``path`` yet.
+    Returns (corpus, live id set)."""
+    from overpaint_spark.operators.ann_index import (
+        build_ann_index,
+        delete_from_ann_index,
+        encode_delta,
+        persist_ann_index,
+    )
+    from overpaint_spark.streaming.sink import idempotent_append
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    n = e.count()
+    idx = build_ann_index(
+        e.filter(F.col("vec_id") < n - 20),
+        dim=64, n_centroids=16, n_subspaces=8, n_codes=16,
+    )
+    persist_ann_index(idx, path)
+    idempotent_append(
+        encode_delta(idx, e.filter(F.col("vec_id") >= n - 20)), 0,
+        f"{path}/codes_delta",
+    )
+    dead = e.filter(F.col("vec_id") % 9 == 4).select("vec_id")
+    delete_from_ann_index(idx, dead, persist_path=path)
+    dead_ids = {r.vec_id for r in dead.collect()}
+    return e, {r.vec_id for r in e.collect()} - dead_ids
+
+
+def test_load_runs_no_inference_and_reuses_geometry(spark, tmp_path, jobs_by_stage):
+    """Opening a grown index reads every relation with its declared
+    schema: the first load runs the two geometry collects and no
+    ``parquet at`` schema-inference stage, and a repeated load of the
+    unchanged index runs no job at all — while still seeing codes ∪
+    codes_delta minus tombstones."""
+    from overpaint_spark.operators.ann_index import load_ann_index
+
+    path = str(tmp_path / "grown")
+    _, live = _grown_store(spark, path)
+    cold = jobs_by_stage(lambda: load_ann_index(spark, path))
+    assert len(cold) == 2, cold
+    assert not [
+        n for names in cold.values() for n in names if n.startswith("parquet at")
+    ], cold
+    assert jobs_by_stage(lambda: load_ann_index(spark, path)) == {}
+    loaded = load_ann_index(spark, path)
+    assert {r.vec_id for r in loaded.indexed.select("vec_id").collect()} == live
+
+
+def test_repersist_at_same_path_is_picked_up(spark, tmp_path, jobs_by_stage):
+    """Geometry reuse is keyed on the part files, not the path: a new
+    index persisted over an opened one is collected again on the next
+    load, and the shared arrays are read-only."""
+    from overpaint_spark.operators.ann_index import (
+        build_ann_index,
+        load_ann_index,
+        persist_ann_index,
+    )
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    path = str(tmp_path / "repersist")
+    persist_ann_index(
+        build_ann_index(e, dim=64, n_centroids=16, n_subspaces=8, n_codes=16), path
+    )
+    first = load_ann_index(spark, path)
+    assert len(first.coarse) == 16
+    with pytest.raises(ValueError):
+        first.coarse[0, 0] = 1.0
+    with pytest.raises(ValueError):
+        first.codebook[0, 0, 0] = 1.0
+
+    other = build_ann_index(e, dim=64, n_centroids=8, n_subspaces=4, n_codes=8)
+    persist_ann_index(other, path)
+    reload_jobs = jobs_by_stage(lambda: load_ann_index(spark, path))
+    assert len(reload_jobs) == 2, reload_jobs
+    again = load_ann_index(spark, path)
+    assert (again.coarse == other.coarse).all()
+    assert (again.codebook == other.codebook).all()
+    assert again.dim == 64 and again.codebook.shape == (4, 8, 16)
+
+
+def test_declared_schemas_equal_inferred(spark, tmp_path):
+    """Each declared schema is exactly what Spark infers from a freshly
+    persisted and grown index (the delta's ``_batch_id`` partition
+    column left out), so declaring them changes no reader's rows."""
+    from overpaint_spark.operators.ann_index import (
+        CENTROIDS_SCHEMA,
+        CODEBOOK_SCHEMA,
+        codes_schema,
+        tombstones_schema,
+    )
+    from overpaint_spark.streaming.sink import BATCH_COL
+
+    path = str(tmp_path / "schemas")
+    _grown_store(spark, path)
+    for rel, ddl in (
+        ("codes", codes_schema("vec_id")),
+        ("codes_delta", codes_schema("vec_id")),
+        ("tombstones", tombstones_schema("vec_id")),
+        ("centroids", CENTROIDS_SCHEMA),
+        ("codebook", CODEBOOK_SCHEMA),
+    ):
+        inferred = spark.read.parquet(f"{path}/{rel}").drop(BATCH_COL).schema
+        declared = spark.createDataFrame([], ddl).schema
+        assert inferred == declared, rel
+
+
+def test_int_typed_tombstones_still_exclude(spark, tmp_path):
+    """Tombstones whose id is ``int``: a directory written before deletes
+    cast the id (int files) keeps excluding its rows on load, a delete
+    through an int-typed id frame writes ``long`` files beside them, and
+    load, stats and compaction all honour both."""
+    import pyarrow.parquet as pq
+
+    from overpaint_spark.operators.ann_index import (
+        ann_index_stats,
+        build_ann_index,
+        compact_ann_index,
+        delete_from_ann_index,
+        load_ann_index,
+        persist_ann_index,
+    )
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    path = str(tmp_path / "int_tomb")
+    persist_ann_index(
+        build_ann_index(e, dim=64, n_centroids=16, n_subspaces=8, n_codes=16), path
+    )
+    n_all = e.count()
+    old = e.filter(F.col("vec_id") % 10 == 1).select(F.col("vec_id").cast("int"))
+    old.write.parquet(f"{path}/tombstones")  # the int-id layout
+    old_ids = {r.vec_id for r in old.collect()}
+
+    def live():
+        return {
+            r.vec_id
+            for r in load_ann_index(spark, path).indexed.select("vec_id").collect()
+        }
+
+    assert live() & old_ids == set() and len(live()) == n_all - len(old_ids)
+    new = e.filter(F.col("vec_id") % 10 == 2).select(F.col("vec_id").cast("int"))
+    delete_from_ann_index(load_ann_index(spark, path), new, persist_path=path)
+    new_ids = {r.vec_id for r in new.collect()}
+    tomb_dir = tmp_path / "int_tomb" / "tombstones"
+    types = {
+        str(pq.read_schema(f).field("vec_id").type)
+        for f in tomb_dir.glob("*.parquet")
+    }
+    assert types == {"int32", "int64"}
+    assert live() & (old_ids | new_ids) == set()
+    stats = ann_index_stats(spark, path).collect()
+    assert sum(r.n_tombstoned for r in stats) == len(old_ids | new_ids)
+    compact_ann_index(spark, path)
+    assert spark.read.parquet(f"{path}/codes").count() == n_all - len(old_ids | new_ids)
+    assert live() & (old_ids | new_ids) == set()
+
+
+def test_empty_ingest_batch_leaves_index_unchanged(spark, tmp_path):
+    """A 0-row arriving file makes a micro-batch with no rows; the sink
+    writes it without an emptiness probe, and the empty ``codes_delta``
+    it leaves reads as zero rows: load, search and compaction see the
+    index unchanged."""
+    import os
+
+    from overpaint_spark.operators.ann_index import (
+        build_ann_index,
+        compact_ann_index,
+        load_ann_index,
+        persist_ann_index,
+        search_ann_index,
+    )
+    from overpaint_spark.streaming.ann_ingest import write_ann_ingest_stream
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    path = str(tmp_path / "idx")
+    persist_ann_index(
+        build_ann_index(e, dim=64, n_centroids=16, n_subspaces=8, n_codes=16), path
+    )
+    q = e.filter(F.col("vec_id") < 4)
+
+    def snapshot():
+        idx = load_ann_index(spark, path)
+        rows = sorted(
+            (r.vec_id, tuple(r.codes), r.cluster_id) for r in idx.indexed.collect()
+        )
+        hits = sorted(
+            (r.query_id, r.neighbor_id, r.rank)
+            for r in search_ann_index(idx, q, n_probe=4, k=5).collect()
+        )
+        return rows, hits
+
+    before = snapshot()
+    src = str(tmp_path / "arriving")
+    e.limit(0).write.parquet(src)
+    stream = spark.readStream.schema("vec_id long, embedding array<float>").parquet(src)
+    sq = write_ann_ingest_stream(
+        stream, path, str(tmp_path / "ckpt"), trigger_available_now=True
+    )
+    assert sq.awaitTermination(120) and sq.exception() is None
+    assert os.path.isdir(f"{path}/codes_delta")
+    assert snapshot() == before
+    compact_ann_index(spark, path)
+    assert not os.path.isdir(f"{path}/codes_delta")
+    assert snapshot() == before
+
+
+def test_build_and_delta_encode_in_one_pass(spark, tmp_path):
+    """build_ann_index and encode_delta code rows come from ONE
+    mapInPandas (assignment and PQ encode share each batch matrix), not
+    a join of an assignment pass with an encode pass."""
+    from overpaint_spark.operators.ann_index import build_ann_index, encode_delta
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx = build_ann_index(e, dim=64, n_centroids=16, n_subspaces=8, n_codes=16)
+    for df in (idx.indexed, encode_delta(idx, e)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("MapInPandas") == 1 and "Join" not in plan, plan
+        assert df.columns == ["vec_id", "codes", "cluster_id"]
+
+
+def test_geometry_cache_under_concurrent_loads(spark, tmp_path, monkeypatch):
+    """Loads of two indexes from several threads, with the geometry cache
+    held to one path so nearly every load evicts the other: each load
+    returns its own index's geometry and none raises."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    from overpaint_spark.operators import ann_index as A
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    paths = {}
+    for c in (8, 16):
+        paths[c] = str(tmp_path / f"c{c}")
+        A.persist_ann_index(
+            A.build_ann_index(e, dim=64, n_centroids=c, n_subspaces=8, n_codes=16),
+            paths[c],
+        )
+    monkeypatch.setattr(A, "_GEOMETRY_CACHE_PATHS", 1)
+
+    def load(i):
+        c = (8, 16)[i % 2]
+        coarse, codebook = A.load_ann_geometry(spark, paths[c])
+        return c, coarse.shape, codebook.shape
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            futs = [pool.submit(inheritable_thread_target(spark)(load), i) for i in range(24)]
+            got = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == 24
+    for c, cshape, cbshape in got:
+        assert cshape == (c, 64) and cbshape == (8, 16, 8)

@@ -249,3 +249,20 @@ def test_split_neardup_leakage_invariants(spark, sf_dir):
     assert r.n_test_docs_leaked <= r.n_test_docs
     assert r.leak_ppm == (1_000_000 * r.n_test_docs_leaked) // r.n_test_docs
     assert r.n_neardup_pairs > 0 and r.n_test_docs > 0
+
+
+def test_load_dedup_index_declares_schemas(spark, sf_dir, tmp_path, jobs_by_stage):
+    """load_dedup_index reads ``hashes/`` and ``bands/`` with the schemas
+    persist_dedup_index writes: the load runs no schema-inference job
+    (no job at all), and each declared schema equals the inferred one."""
+    from overpaint_spark.operators.dedup import load_dedup_index, persist_dedup_index
+    from overpaint_spark.sources.catalog import load_table
+
+    docs = load_table(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    idx = str(tmp_path / "dedup_index")
+    persist_dedup_index(docs, idx)
+    loaded = []
+    assert jobs_by_stage(lambda: loaded.extend(load_dedup_index(spark, idx))) == {}
+    for rel, df in zip(("hashes", "bands"), loaded):
+        assert df.schema == spark.read.parquet(f"{idx}/{rel}").schema, rel
+        assert df.count() == spark.read.parquet(f"{idx}/{rel}").count() > 0
