@@ -2303,9 +2303,12 @@ def _skip_no_data_batches(fn):
 
     - inner stream-stream joins emit matches as data arrives; the
       no-data batch only evicts state (stream_attribution);
-    - foreachBatch / stateless sinks receive an empty frame and the
-      idempotent upsert writes nothing (clean/phash/fk gates, cdc,
-      psi, lm, cms, rule alerts, ann ingest);
+    - foreachBatch and other stateless sinks (clean/phash/fk gates,
+      cdc, psi, lm, cms, rule alerts, ann ingest) have no state to
+      evict, so Spark schedules no no-data batch for them and the flag
+      changes nothing; an empty batch they did receive would not be a
+      no-op everywhere (the rule-alert sink appends the rules' metrics
+      over zero rows);
     - complete-mode aggregates re-emit the identical final state
       (corpus_stats, length_histogram);
     - applyInPandasWithState witnesses configure NO timeout, so the
@@ -9893,8 +9896,8 @@ def q_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # read_sink's BATCH_COL drop is a no-op if the dispatch chose the
     # plain file sink (tiny-model map path), so both layouts read here
-    return read_sink(spark, out_dir).select(
-        "doc_id", "n_grams", "lm_score_ppm"
+    return read_sink(
+        spark, out_dir, "doc_id long, n_grams long, lm_score_ppm long"
     )
 
 
@@ -10001,7 +10004,8 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from overpaint_spark.rules.psi import histogram
-    from overpaint_spark.streaming.drift import write_psi_stream
+    from overpaint_spark.streaming.drift import PSI_SCHEMA, write_psi_stream
+    from overpaint_spark.streaming.sink import read_sink
 
     e = _t(spark, sf_dir, "events")
     base_hist = histogram(
@@ -10038,9 +10042,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_psi: availableNow trigger did not complete within "
             "300 s — refusing to return a partial sink"
         )
-    from overpaint_spark.streaming.sink import read_sink
-
-    return read_sink(spark, out_dir)
+    return read_sink(spark, out_dir, PSI_SCHEMA)
 
 
 def _oracle_stream_psi() -> str:
@@ -10062,7 +10064,10 @@ def _oracle_stream_psi() -> str:
             "* 1000000.0 + 0.5)) AS BIGINT) < 100000 THEN 'stable' "
             "WHEN CAST(SUM(FLOOR((pc - pb) * LN(pc / pb) * 1000000.0 "
             "+ 0.5)) AS BIGINT) <= 250000 THEN 'shifted' "
-            f"ELSE 'action' END FROM t{s}) AS band"
+            f"ELSE 'action' END FROM t{s}) AS band "
+            # a split with no non-NULL value is a batch with nothing to
+            # score: the operator emits no row for it
+            f"WHERE EXISTS (SELECT 1 FROM cc{s})"
         )
     cur_ctes = ", ".join(
         f"cc{s} AS (SELECT {bucket} AS bucket, COUNT(*) AS n FROM events "
@@ -10139,6 +10144,7 @@ def q_stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from overpaint_spark.rules.rules import METRICS_SCHEMA
     from overpaint_spark.streaming.alerts import write_rule_alerts_stream
     from overpaint_spark.streaming.sink import read_sink
 
@@ -10180,9 +10186,7 @@ def q_stream_rule_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_rule_alerts: availableNow trigger did not complete "
             "within 300 s — refusing to return a partial alert log"
         )
-    return read_sink(spark, alert_dir).select(
-        "table_name", "rule_name", "column_name", "metric_value", "passed"
-    )
+    return read_sink(spark, alert_dir, METRICS_SCHEMA)
 
 
 def _oracle_stream_rule_alerts() -> str:
@@ -10284,12 +10288,7 @@ def q_stream_phash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_phash_admit: availableNow trigger did not complete "
             "within 300 s — refusing to return a partial sink"
         )
-    return read_sink(
-        spark,
-        out_dir,
-        schema="doc_id long, text string, lang string, source string, "
-        "n_chars long",
-    ).select("doc_id", "lang", "n_chars")
+    return read_sink(spark, out_dir, "doc_id long, lang string, n_chars long")
 
 
 def _oracle_stream_phash_admit() -> str:
@@ -10395,16 +10394,7 @@ def q_stream_clean_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_clean_admit: availableNow trigger did not complete "
             "within 300 s — refusing to return a partial sink"
         )
-    # explicit schema: a replica corpus can legitimately admit ZERO
-    # docs (every arrival a duplicate) and an empty sink has no footer
-    # to infer from — zero rows is the gate's honest answer, not an
-    # inference error (caught by the 10× scale guard)
-    return read_sink(
-        spark,
-        out_dir,
-        schema="doc_id long, text string, lang string, source string, "
-        "n_chars long",
-    ).select("doc_id", "lang", "n_chars")
+    return read_sink(spark, out_dir, "doc_id long, lang string, n_chars long")
 
 
 def _oracle_stream_clean_admit() -> str:
@@ -11254,7 +11244,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stream_cdc_apply: availableNow trigger did not complete "
             "within 300 s — refusing to return a partial sink"
         )
-    return spark.read.parquet(table).select(*cols, "ver")
+    return spark.read.schema(base.schema).parquet(table).select(*cols, "ver")
 
 
 def _oracle_stream_cdc_apply() -> str:
@@ -11842,6 +11832,7 @@ def q_stream_fk_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from overpaint_spark.streaming.integrity import write_fk_gate_stream
+    from overpaint_spark.streaming.sink import read_sink
 
     o = _t(spark, sf_dir, "orders")
     pk = (
@@ -11880,7 +11871,7 @@ def q_stream_fk_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "within 300 s — refusing to return a partial sink"
         )
     return (
-        spark.read.parquet(out_dir)
+        read_sink(spark, out_dir, "o_orderpriority string, fk_ok boolean")
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.when(F.col("fk_ok"), 1)).alias("n_admitted"),

@@ -151,6 +151,13 @@ def row_count_at_least(n: int) -> Rule:
     )
 
 
+#: the metrics relation :func:`evaluate_rules` returns
+METRICS_SCHEMA = (
+    "table_name string, rule_name string, column_name string, "
+    "metric_value long, passed boolean"
+)
+
+
 def evaluate_rules(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -161,10 +168,6 @@ def evaluate_rules(
     Output: (table_name, rule_name, column_name, metric_value long,
     passed boolean), ordered by the natural (table, rule, column) key.
     """
-    empty_schema = (
-        "table_name string, rule_name string, column_name string, "
-        "metric_value long, passed boolean"
-    )
     parts = []
     for tname in sorted(rules):
         tdf = tables[tname]
@@ -192,7 +195,7 @@ def evaluate_rules(
     if not parts:
         # an empty suite evaluates to an empty metrics relation, not an
         # IndexError — the on-call's '{}' config edit must not crash
-        return local_df(spark, [], empty_schema)
+        return local_df(spark, [], METRICS_SCHEMA)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

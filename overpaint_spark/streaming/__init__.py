@@ -19,7 +19,4 @@ from overpaint_spark.streaming.topk import (  # noqa: F401
     streaming_top_tokens,
     top_k_snapshot,
 )
-from overpaint_spark.streaming.drift import (  # noqa: F401
-    write_drift_monitor_stream,
-    write_psi_stream,
-)
+from overpaint_spark.streaming.drift import write_psi_stream  # noqa: F401

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 
 def write_rule_alerts_stream(
@@ -42,28 +42,20 @@ def write_rule_alerts_stream(
 
     Output rows: (batch_id, table_name, rule_name, column_name,
     metric_value, passed) — the same metrics relation as the batch
-    engine plus batch provenance, so one dashboard reads both.
+    engine plus batch provenance, so one dashboard reads both. An empty
+    micro-batch is validated too: its metrics are the rules' values
+    over zero rows, as the batch engine and SQL give them.
     """
     from overpaint_spark.rules import evaluate_rules
 
-    def validate(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def validate(batch_df: DataFrame, batch_id: int) -> DataFrame:
         metrics = evaluate_rules(
-            spark, {table_name: batch_df}, {table_name: list(rules)}
+            batch_df.sparkSession, {table_name: batch_df}, {table_name: list(rules)}
         )
         if not include_passes:
             metrics = metrics.filter(~F.col("passed"))
-        out = metrics.select(
-            F.lit(batch_id).alias("batch_id"), "*"
-        )
-        idempotent_append(out, batch_id, alert_dir)
+        return metrics.select(F.lit(batch_id).alias("batch_id"), "*")
 
-    writer = (
-        stream.writeStream.foreachBatch(validate)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_sink(
+        stream, validate, alert_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

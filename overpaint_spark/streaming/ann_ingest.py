@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 
 def write_ann_ingest_stream(
@@ -68,15 +68,12 @@ def write_ann_ingest_stream(
 
     coarse, codebook = load_ann_geometry(stream.sparkSession, index_path)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
+    def encode(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # the stream's contract is the STORED artifact: readers reload
         # via load_ann_index, which unions codes ∪ codes_delta
-        delta = ivfpq_encode(batch_df, coarse, codebook, id_col, vec_col)
-        idempotent_append(delta, batch_id, f"{index_path}/codes_delta")
+        return ivfpq_encode(batch_df, coarse, codebook, id_col, vec_col)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, encode, f"{index_path}/codes_delta", checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -38,7 +38,7 @@ from overpaint_spark.operators.heavyhitters import (
     CMS_WIDTH,
     cms_cells,
 )
-from overpaint_spark.streaming.sink import idempotent_append, read_sink
+from overpaint_spark.streaming.sink import read_sink, start_sink
 
 
 def write_cms_stream(
@@ -53,19 +53,12 @@ def write_cms_stream(
     """Start a foreachBatch sink appending each micro-batch's partial
     CMS matrix (≤ depth·width rows) to ``out_dir``."""
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(
-            cms_cells(batch_df, depth=depth, width=width, text_col=text_col),
-            batch_id,
-            out_dir,
-        )
+    def partial(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return cms_cells(batch_df, depth=depth, width=width, text_col=text_col)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, partial, out_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cms_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:

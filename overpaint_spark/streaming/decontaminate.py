@@ -35,7 +35,7 @@ from overpaint_spark.operators.decontaminate import (
     build_gram_bloom,
 )
 from overpaint_spark.operators.dedup import distinct_shingles
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 
 def contamination_gate_flags(
@@ -113,20 +113,14 @@ def write_decontaminate_stream(
         n_bits = bloom_geometry(eval_grams.count())
     words = build_gram_bloom(eval_grams, n_bits, n_hashes)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def admit(batch_df: DataFrame, batch_id: int) -> DataFrame:
         flags = contamination_gate_flags(
             batch_df, eval_grams, words, id_col, text_col, k, n_bits, n_hashes
         )
-        admitted = batch_df.join(
+        return batch_df.join(
             flags.filter(F.col("admitted")).select(id_col), id_col, "left_semi"
         )
-        idempotent_append(admitted, batch_id, out_dir)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, admit, out_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from overpaint_spark.materialize import materialize
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 
 def streaming_exact_dedup(
@@ -120,21 +120,15 @@ def write_incremental_dedup_stream(
         if existing_bands is None:
             existing_bands = materialize(built_b)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def admit(batch_df: DataFrame, batch_id: int) -> DataFrame:
         flags = incremental_dedup_flags(
             existing, batch_df, id_col, text_col, k, num_hashes, bands,
             existing_hashes=existing_hashes, existing_bands=existing_bands,
         )
-        admitted = batch_df.join(
+        return batch_df.join(
             flags.filter(F.col("admitted")).select(id_col), id_col, "left_semi"
         )
-        idempotent_append(admitted, batch_id, out_dir)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, admit, out_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

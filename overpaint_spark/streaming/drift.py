@@ -1,18 +1,26 @@
 """Streaming distribution-drift monitor: per-micro-batch PSI against a
-frozen baseline histogram.
+frozen reference histogram.
 
 The batch path (rules/psi.py) compares two runs after the fact; in a
 live pipeline the question is "is the data arriving RIGHT NOW still
 shaped like the training/baseline window?". Each micro-batch is reduced
 to its fixed-bin histogram (a shuffle of n_bins rows — the histogram
-cost is independent of batch size), PSI-folded against the baseline on
-the driver, and appended to a parquet drift log with batch provenance.
+cost is independent of batch size), PSI-folded against the reference
+on the driver, and appended to a parquet drift log.
 
-The baseline is collected ONCE at monitor construction (n_bins+2 rows
+The reference is collected ONCE at monitor construction (n_bins+2 rows
 held on the driver) — the stream never re-reads it, and because bin
 edges are declared up front the comparison stays valid across the whole
 run. State: none (no watermarks, no aggregation state); the monitor is
 exactly as scalable as the ingest itself.
+
+PSI is kept in the cross-engine-reproducible form: per-bucket PSI terms
+half-up ppm-quantized then summed as exact BIGINTs
+(rules/psi.psi_ppm_from_histograms — the column_entropy idiom), and
+batches self-identified by an optional staged ``label_col``, so the
+declared ``stream_psi`` relation is order-independent and a DuckDB
+oracle mirrors it bucket-for-bucket. The band is read off the same
+ppm value.
 """
 
 from __future__ import annotations
@@ -22,84 +30,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from overpaint_spark.localrel import local_df
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.rules.psi import psi_band
+from overpaint_spark.streaming.sink import start_sink
 
-from overpaint_spark.rules.psi import (
-    HistogramSpec,
-    histogram,
-    psi_band,
-    psi_from_histograms,
-)
-
-
-def write_drift_monitor_stream(
-    stream: DataFrame,
-    baseline: DataFrame,
-    spec: HistogramSpec,
-    drift_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """Monitor ``spec.column`` of a stream for distribution drift.
-
-    Appends one row per non-empty micro-batch to ``drift_dir``:
-    (batch_id, column_name, n_rows, psi, band). Exactly-once per batch:
-    the row lands via the batch-id-keyed idempotent sink
-    (streaming/sink.py), so a crash-replayed batch replaces its own
-    partition (same pattern as streaming/alerts.py).
-    """
-    base_hist = [
-        (r.bucket, r.n)
-        for r in histogram(
-            baseline, spec.column, spec.lo, spec.hi, spec.n_bins
-        ).collect()
-    ]
-    if not base_hist:
-        raise ValueError(f"baseline histogram for {spec.column} is empty")
-
-    def monitor(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        cur = [
-            (r.bucket, r.n)
-            for r in histogram(
-                batch_df, spec.column, spec.lo, spec.hi, spec.n_bins
-            ).collect()
-        ]
-        if not cur:  # batch had only NULLs in the monitored column
-            return
-        value = psi_from_histograms(base_hist, cur, spec.n_bins)
-        n_rows = sum(n for _, n in cur)
-        idempotent_append(
-            local_df(
-                spark,
-                [(batch_id, spec.column, n_rows, value, psi_band(value))],
-                "batch_id long, column_name string, n_rows long, psi double, band string",
-            ),
-            batch_id,
-            drift_dir,
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-# --- oracle-checkable integer-ppm variant (r7) ------------------------------
-#
-# write_drift_monitor_stream above is the OPERATIONAL monitor: float
-# PSI + batch_id provenance, exactly what a live pipeline logs. The
-# declared ``stream_psi`` relation needs the cross-engine-reproducible
-# form: per-bucket PSI terms half-up ppm-quantized then summed as exact
-# BIGINTs (rules/psi.psi_ppm_from_histograms — the column_entropy
-# idiom), and batches self-identified by a staged ``label_col`` so the
-# emitted relation is order-independent and a DuckDB oracle can mirror
-# it bucket-for-bucket. Same per-batch plan shape as the monitor above.
+#: the drift log's row: one per scored batch
+PSI_SCHEMA = "split_id long, n_rows long, psi_ppm long, band string"
 
 
 def psi_batch_row(
@@ -153,38 +88,25 @@ def write_psi_stream(
     label_col: str | None = None,
     trigger_available_now: bool = False,
 ) -> StreamingQuery:
-    """Integer-ppm PSI per micro-batch: one
-    ``(split_id, n_rows, psi_ppm, band)`` row appended to ``out_dir``
-    per non-empty batch, scored against ``base_hist`` (a (bucket, n)
-    relation — collected and frozen HERE, once). See the section
-    comment for how this differs from write_drift_monitor_stream."""
+    """Integer-ppm PSI per micro-batch: one :data:`PSI_SCHEMA` row
+    appended to ``out_dir`` per batch with a non-NULL ``column`` value,
+    scored against ``base_hist`` (a (bucket, n) relation — collected
+    and frozen HERE, once)."""
     base_counts = [(r.bucket, r.n) for r in base_hist.collect()]
     if not base_counts:
         raise ValueError("reference histogram is empty")
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
+    def score(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
         row = psi_batch_row(
             batch_df, base_counts, column, lo, hi, n_bins, label_col
         )
         if row is None:
-            return
-        # local_df: ONE slice up front — the old createDataFrame +
-        # coalesce(1) serialized 32 partition evaluations (each paying
-        # the ScalaReflection toll) into one task: ~5 s per 1-row batch
-        # append on the bench box (overpaint_spark/localrel.py)
-        idempotent_append(
-            local_df(
-                batch_df.sparkSession,
-                [row],
-                "split_id long, n_rows long, psi_ppm long, band string",
-            ),
-            batch_id,
-            out_dir,
-        )
+            return None
+        # local_df builds the row from one local slice; createDataFrame
+        # + coalesce(1) evaluates every partition in one task, ~5 s per
+        # 1-row batch on the bench box (overpaint_spark/localrel.py)
+        return local_df(batch_df.sparkSession, [row], PSI_SCHEMA)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, score, out_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

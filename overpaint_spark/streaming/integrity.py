@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 
 def fk_gate_flags(child: DataFrame, parent_keys: DataFrame, fk: str) -> DataFrame:
@@ -85,12 +85,9 @@ def write_fk_gate_stream(
         .localCheckpoint(eager=True)
     )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(fk_gate_flags(batch_df, pk, fk), batch_id, out_dir)
+    def gate(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return fk_gate_flags(batch_df, pk, fk)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, gate, out_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 
 def frozen_model(reference: DataFrame, sample_mod: int = 10):
@@ -148,35 +148,29 @@ def write_lm_score_stream(
     # its build plan (the count here, the totals + broadcast per batch)
     model = model.localCheckpoint(eager=True)
     n_entries = model.count()
-    if n_entries <= max_map_entries:
-        grams, counts, total, v = frozen_model(model)
-        scored = lm_score_stream(
-            stream, grams, counts, total, v, id_col, text_col
-        ).filter(F.col("n_grams") > 0)
-        writer = (
-            scored.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-    else:
+    if n_entries > max_map_entries:
         from overpaint_spark.operators.lm import lm_score
 
-        def apply(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.take(1):
-                return
+        def score(batch_df: DataFrame, batch_id: int) -> DataFrame:
             docs = batch_df.select(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
             )
-            out = lm_score(docs, model).select(
+            return lm_score(docs, model).select(
                 F.col("doc_id").alias(id_col), "n_grams", "lm_score_ppm"
             )
-            # exactly-once: batch-id-keyed overwrite (streaming/sink.py),
-            # matching the map-literal path's journaled file sink
-            idempotent_append(out, batch_id, out_dir)
 
-        writer = stream.writeStream.foreachBatch(apply).option(
-            "checkpointLocation", checkpoint_dir
+        return start_sink(
+            stream, score, out_dir, checkpoint_dir, trigger_available_now
         )
+    grams, counts, total, v = frozen_model(model)
+    scored = lm_score_stream(
+        stream, grams, counts, total, v, id_col, text_col
+    ).filter(F.col("n_grams") > 0)
+    writer = (
+        scored.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+    )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from overpaint_spark.streaming.sink import idempotent_append
+from overpaint_spark.streaming.sink import start_sink
 
 _BAND_EXPRS = (
     lambda c: c("w0").bitwiseAND(F.lit(0xFFFF)),
@@ -145,21 +145,15 @@ def write_phash_dedup_stream(
 
     existing_hashes = materialize(existing_hashes)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def admit(batch_df: DataFrame, batch_id: int) -> DataFrame:
         flags = phash_gate_flags(
             batch_df, existing_hashes, max_hamming, id_col, text_col
         )
         rejected = flags.filter(~F.col("admitted")).select(
             F.col("asset_id").alias(id_col)
         )
-        admitted = batch_df.join(rejected, id_col, "left_anti")
-        idempotent_append(admitted, batch_id, out_dir)
+        return batch_df.join(rejected, id_col, "left_anti")
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_dir
+    return start_sink(
+        stream, admit, out_dir, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,36 +1,45 @@
-"""Replay-idempotent parquet append for ``foreachBatch`` sinks.
+"""The one ``foreachBatch`` parquet sink behind every appending stream.
 
-Structured Streaming's built-in file sink is exactly-once because it
-journals committed files in ``_spark_metadata``; a ``foreachBatch``
-body that does a plain ``mode("append")`` parquet write is NOT — a
-crash between the append and the checkpoint commit replays the batch
-and double-appends it. Spark's own documentation prescribes the fix
-this module implements: ``foreachBatch`` hands the body a
-deterministic ``batch_id``, so making the write idempotent ON that id
-restores exactly-once end-to-end ("use the batchId to deduplicate").
+Contract:
 
-The idiom is the repo's own ``operators/upsert.py`` machinery: stamp
-every row with its micro-batch id and write via DYNAMIC partition
-overwrite keyed on it. A first delivery creates the
-``_batch_id=N`` directory; a replay of batch N REPLACES exactly that
-directory (dynamic mode touches only partitions present in the
-written data — other batches' directories are never read or
-rewritten), so any number of replays converge to one copy. Commit
-visibility relies on the same staging the batch overwrite path
-already uses on this filesystem.
+- **The sink directory exists from construction.** :func:`start_sink`
+  creates ``out_dir`` before the query starts, so a stream that has
+  received nothing, or only empty files, still leaves a sink that
+  reads as zero rows.
+- **Readers declare their schema.** :func:`read_sink` takes the output
+  schema as a DDL string; it never infers one, because an empty sink
+  has no parquet footer to infer from.
+- **An empty batch appends nothing, and no writer probes for it.** A
+  gate's semi- or anti-join over an empty batch is already empty, so
+  its write lands no rows; a writer with nothing to say returns
+  ``None`` from its ``batch_rows`` and no write runs. A writer whose
+  answer over zero rows is itself rows (the rule alerts: metrics over
+  an empty batch) appends them, as SQL over an empty relation would.
+- **Every append is replay-idempotent.** Structured Streaming's
+  built-in file sink is exactly-once because it journals committed
+  files in ``_spark_metadata``; a plain ``mode("append")`` in a
+  ``foreachBatch`` body is not — a crash between the append and the
+  checkpoint commit replays the batch and double-appends it. Spark's
+  own documentation prescribes the fix: ``foreachBatch`` hands the
+  body a deterministic ``batch_id``, so :func:`idempotent_append`
+  stamps every row with it and writes by DYNAMIC partition overwrite
+  keyed on it. A first delivery creates the ``_batch_id=N``
+  directory; a replay of batch N replaces exactly that directory and
+  never reads or rewrites another batch's, so any number of replays
+  converge to one copy.
 
-Readers go through :func:`read_sink`, which drops the bookkeeping
-partition column — downstream schemas are unchanged from the old
-append sink. At 100 TB cadence the cost is identical to the plain
-append (one directory per micro-batch, written once); the only delta
-is the partition column in the sink layout, which doubles as batch
-provenance for free.
+:func:`read_sink` drops the bookkeeping partition column, so
+downstream schemas are the writers' own; the column doubles as batch
+provenance in the sink layout.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 #: bookkeeping partition column stamped onto every sink row
 BATCH_COL = "_batch_id"
@@ -61,18 +70,42 @@ def idempotent_append(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
     )
 
 
-def read_sink(
-    spark: SparkSession, out_dir: str, schema: str | None = None
-) -> DataFrame:
-    """Read an idempotent sink back with the original output schema
-    (the bookkeeping partition column dropped).
+def start_sink(
+    stream: DataFrame,
+    batch_rows: Callable[[DataFrame, int], DataFrame | None],
+    out_dir: str,
+    checkpoint_dir: str,
+    trigger_available_now: bool = False,
+) -> StreamingQuery:
+    """Start ``stream`` into the sink at ``out_dir``: per micro-batch,
+    ``batch_rows(batch_df, batch_id)`` returns the rows to append (or
+    ``None`` for nothing) and they land through
+    :func:`idempotent_append`. ``out_dir`` is created here, through the
+    Hadoop filesystem the writes use."""
+    spark = stream.sparkSession
+    path = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
+    path.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(path)
 
-    Pass ``schema`` (DDL string, WITHOUT the bookkeeping column) when
-    the sink may legitimately be EMPTY — a gate that admitted nothing
-    leaves a directory with no readable parquet footer, and schema
-    inference would fail on it; with an explicit schema an empty sink
-    reads as zero rows, which is the gate's honest answer."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(f"{schema}, {BATCH_COL} long")
-    return reader.parquet(out_dir).drop(BATCH_COL)
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        rows = batch_rows(batch_df, batch_id)
+        if rows is not None:
+            idempotent_append(rows, batch_id, out_dir)
+
+    writer = stream.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def read_sink(spark: SparkSession, out_dir: str, schema: str) -> DataFrame:
+    """Read a sink back with its declared output ``schema`` (a DDL
+    string without the bookkeeping column, which is dropped). An empty
+    sink reads as zero rows. The schema may name a subset of the
+    written columns; the read then scans only those."""
+    return (
+        spark.read.schema(f"{schema}, {BATCH_COL} long")
+        .parquet(out_dir)
+        .drop(BATCH_COL)
+    )

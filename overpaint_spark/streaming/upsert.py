@@ -39,8 +39,8 @@ def write_upsert_stream(
     """Apply a change stream to the Parquet table at ``table_path``."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # an empty batch touches no partition: upsert_partitioned's
+        # affected-partition collect comes back empty and nothing is written
         upsert_partitioned(
             batch_df.sparkSession,
             table_path,

@@ -23,6 +23,7 @@ from overpaint_spark.streaming.sink import (
 )
 
 SF = "/root/testdata/sf0.001"
+ROWS = "id long, v string"
 
 
 def test_replay_same_batch_converges(spark, tmp_path):
@@ -35,10 +36,10 @@ def test_replay_same_batch_converges(spark, tmp_path):
     idempotent_append(b1, 1, out)
     for _ in range(3):  # crash-replay, thrice
         idempotent_append(b0, 0, out)
-    got = sorted((r.id, r.v) for r in read_sink(spark, out).collect())
+    got = sorted((r.id, r.v) for r in read_sink(spark, out, ROWS).collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
     # reader schema is the original output schema, no bookkeeping col
-    assert read_sink(spark, out).columns == ["id", "v"]
+    assert read_sink(spark, out, ROWS).columns == ["id", "v"]
 
 
 def test_replay_partial_rewrite_repairs_batch(spark, tmp_path):
@@ -51,7 +52,7 @@ def test_replay_partial_rewrite_repairs_batch(spark, tmp_path):
     idempotent_append(stale, 0, out)
     full = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     idempotent_append(full, 0, out)  # the replay
-    got = sorted((r.id, r.v) for r in read_sink(spark, out).collect())
+    got = sorted((r.id, r.v) for r in read_sink(spark, out, ROWS).collect())
     assert got == [(1, "a"), (2, "b")]
 
 
@@ -92,7 +93,7 @@ def test_fk_gate_replay_no_double_admissions(spark, tmp_path):
     out = str(tmp_path / "out")
     for _ in range(2):  # first delivery + crash-replay
         idempotent_append(fk_gate_flags(batch, parent, "fk"), 0, out)
-    rows = read_sink(spark, out).collect()
+    rows = read_sink(spark, out, "id long, fk long, fk_ok boolean").collect()
     assert len(rows) == 4
     assert sum(1 for r in rows if not r.fk_ok) == 1  # fk=30 quarantined once
 

@@ -303,45 +303,38 @@ def test_streaming_rule_alerts(spark, events_dir, tmp_path):
 def test_streaming_drift_monitor(spark, events_dir, tmp_path):
     """Per-batch PSI vs a frozen baseline: a stream of the SAME data is
     stable (PSI ≈ 0); a location-shifted stream lands in 'action'."""
-    from overpaint_spark.rules.psi import HistogramSpec
-    from overpaint_spark.streaming import (
-        read_events_stream,
-        write_drift_monitor_stream,
-    )
+    from overpaint_spark.rules.psi import histogram
+    from overpaint_spark.streaming import read_events_stream, write_psi_stream
+    from overpaint_spark.streaming.drift import PSI_SCHEMA
+    from overpaint_spark.streaming.sink import read_sink
 
-    spec = HistogramSpec("events", "value", 0.0, 200.0, 10)
     baseline = spark.read.parquet(events_dir)
+    base_hist = histogram(baseline, "value", 0.0, 200.0, 10)
+
+    def monitor(src: str, name: str) -> list:
+        q = write_psi_stream(
+            read_events_stream(spark, src),
+            base_hist,
+            str(tmp_path / name),
+            str(tmp_path / f"ckpt_{name}"),
+            column="value", lo=0.0, hi=200.0, n_bins=10,
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        return read_sink(spark, str(tmp_path / name), PSI_SCHEMA).collect()
 
     # same distribution → stable
-    q = write_drift_monitor_stream(
-        read_events_stream(spark, events_dir),
-        baseline,
-        spec,
-        str(tmp_path / "drift_same"),
-        str(tmp_path / "ckpt_same"),
-        trigger_available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(str(tmp_path / "drift_same")).collect()
+    rows = monitor(events_dir, "drift_same")
     assert len(rows) >= 1
-    assert all(r.band == "stable" and abs(r.psi) < 0.01 for r in rows)
+    assert all(r.band == "stable" and r.psi_ppm < 10_000 for r in rows)
     assert sum(r.n_rows for r in rows) == baseline.count()
 
     # shifted distribution (value + 150 pushes mass into overflow) → action
     shift_dir = str(tmp_path / "events_shifted")
     baseline.withColumn("value", F.col("value") + 150.0).write.parquet(shift_dir)
-    q2 = write_drift_monitor_stream(
-        read_events_stream(spark, shift_dir),
-        baseline,
-        spec,
-        str(tmp_path / "drift_shift"),
-        str(tmp_path / "ckpt_shift"),
-        trigger_available_now=True,
-    )
-    q2.awaitTermination(120)
-    shifted = spark.read.parquet(str(tmp_path / "drift_shift")).collect()
+    shifted = monitor(shift_dir, "drift_shift")
     assert len(shifted) >= 1
-    assert all(r.band == "action" and r.psi > 0.25 for r in shifted)
+    assert all(r.band == "action" and r.psi_ppm > 250_000 for r in shifted)
 
 
 @pytest.mark.slow

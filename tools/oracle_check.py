@@ -59,7 +59,8 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
                 maxd = np.nanmax(np.abs(sv_n - dv_n))
                 problems.append(f"col {c}: {int((~eq).sum())} float diffs (max {maxd:.3e}): {diffs}")
         else:
-            eq = sv.to_numpy() == dv.to_numpy()
+            # NaT != NaT like NaN != NaN: a NULL pair is equal
+            eq = (sv.to_numpy() == dv.to_numpy()) | (sv.isna() & dv.isna()).to_numpy()
             if not eq.all():
                 idx = np.where(~eq)[0][:3]
                 diffs = [f"{sv.iloc[i]!r}!={dv.iloc[i]!r}" for i in idx]
